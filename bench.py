@@ -11,8 +11,8 @@ reported alongside.
 
 Round-7 restructure (r6 VERDICT directive #1): the headline is split
 into GROUPS of <= _GROUP_SIZE queries, each group measured in its OWN
-subprocess JVM.  The r4 and r6 bisects (scripts/bisect_r4_regressions
-.py, scripts/bisect_r6_drift.py + BISECT_R6_DRIFT.json) both proved
+subprocess JVM.  The r4 and r6 bisects (one-shot scripts, since
+removed; see git history and BISECT_R6_DRIFT.json) both proved
 that a long single-JVM session taxes late measurements by 25-45%
 (code-cache/JIT/heap state), and the tax GREW with the headline count
 (33 -> 48 queries r5 -> r6 drove a +18% phantom "regression" with zero

@@ -26,12 +26,15 @@ def _plogp2(p: Column) -> Column:
 def entropy2(x: Column, y: Column) -> Column:
     """Binary entropy H(x/y) in bits — reference FeatureSelectionCloud.scala:350-353.
 
-    The reference does not guard p∈{0,1} and produces NaN, later patched
-    by replaceNaN; we compute the guarded value directly and use
-    :func:`nan_to_zero` only where reference parity demands it.
+    The reference does not guard p∈{0,1} or y = 0 and produces NaN,
+    later patched by replaceNaN; we compute the guarded value directly
+    and use :func:`nan_to_zero` only where reference parity demands it.
+    An empty partition (y = 0, e.g. the t − tg term of an API present in
+    every document) scores 0.0 instead of dividing by zero, which ANSI
+    mode would raise.
     """
     p = x.cast("double") / y.cast("double")
-    return _plogp2(p) + _plogp2(F.lit(1.0) - p)
+    return F.when(y == 0, F.lit(0.0)).otherwise(_plogp2(p) + _plogp2(F.lit(1.0) - p))
 
 
 def info_gain(

@@ -61,18 +61,22 @@ def kmeans_assign(
     return model.transform(df).withColumnRenamed("prediction", "cluster")
 
 
-def _auc(predictions: DataFrame, score_col: str, label_col: str = "label") -> float:
-    """Exact ROC-AUC of the positive-class score (rawPrediction[1]).
+def _grid_auc(train: DataFrame, cv: DataFrame, grid) -> list[tuple[str, float, float]]:
+    """Fit each ``(model, param, estimator)`` of ``grid`` on ``train``,
+    score ``cv`` → [(model, param, auc)].
 
-    Routed through the same Mann–Whitney aggregation that the
-    oracle-checked ``fixed_scorer_auc``/``auc_rank_based`` catalog
-    queries pin against DuckDB (ml/metrics.py::exact_auc) — the
-    evaluator's 1000-bin ROC approximation is replaced by the exact
-    area, so every grid's metric column is computed by oracle-verified
-    code.  Equality with ``BinaryClassificationEvaluator`` (up to its
-    binning) is asserted in tests/test_ml_queries.py.
+    AUC of the positive-class score (rawPrediction[1]) via the exact
+    Mann–Whitney aggregation that the oracle-checked
+    ``fixed_scorer_auc``/``auc_rank_based`` catalog queries pin against
+    DuckDB (ml/metrics.py::exact_auc) — the evaluator's 1000-bin ROC
+    approximation is replaced by the exact area.  Equality with
+    ``BinaryClassificationEvaluator`` (up to its binning) is asserted in
+    tests/test_ml_queries.py.
     """
-    return exact_auc(predictions, score_col, label_col)
+    return [
+        (model, float(param), exact_auc(est.fit(train).transform(cv), "rawPrediction"))
+        for model, param, est in grid
+    ]
 
 
 def dt_auc_grid(
@@ -82,15 +86,12 @@ def dt_auc_grid(
     impurities: tuple[str, ...] = DT_IMPURITIES,
 ) -> list[tuple[str, float, float]]:
     """Decision-tree grid → [(model, param, auc)] (SVMDT.scala:133-163)."""
-    out: list[tuple[str, float, float]] = []
-    for impurity in impurities:
-        for depth in depths:
-            clf = DecisionTreeClassifier(
-                impurity=impurity, maxDepth=depth, labelCol="label", seed=DEFAULT_SEED
-            )
-            preds = clf.fit(train).transform(cv)
-            out.append((f"dt_{impurity}", float(depth), _auc(preds, "rawPrediction")))
-    return out
+    return _grid_auc(train, cv, (
+        (f"dt_{impurity}", depth, DecisionTreeClassifier(
+            impurity=impurity, maxDepth=depth, labelCol="label", seed=DEFAULT_SEED))
+        for impurity in impurities
+        for depth in depths
+    ))
 
 
 def svm_auc_grid(
@@ -100,12 +101,10 @@ def svm_auc_grid(
     max_iter: int = 20,
 ) -> list[tuple[str, float, float]]:
     """LinearSVC grid → [(model, param, auc)] (SVMDT.scala:188-214)."""
-    out: list[tuple[str, float, float]] = []
-    for reg in regs:
-        clf = LinearSVC(regParam=reg, maxIter=max_iter, labelCol="label")
-        preds = clf.fit(train).transform(cv)
-        out.append(("svm", float(reg), _auc(preds, "rawPrediction")))
-    return out
+    return _grid_auc(train, cv, (
+        ("svm", reg, LinearSVC(regParam=reg, maxIter=max_iter, labelCol="label"))
+        for reg in regs
+    ))
 
 
 def lr_auc_grid(
@@ -120,12 +119,10 @@ def lr_auc_grid(
     (LogisticRegressionWithSGD behind ``case '1'``, SVMDT.scala:206-208)
     — modern LBFGS optimizer here, same regParam grid as the SVM path.
     """
-    out: list[tuple[str, float, float]] = []
-    for reg in regs:
-        clf = LogisticRegression(regParam=reg, maxIter=max_iter, labelCol="label")
-        preds = clf.fit(train).transform(cv)
-        out.append(("lr", float(reg), _auc(preds, "rawPrediction")))
-    return out
+    return _grid_auc(train, cv, (
+        ("lr", reg, LogisticRegression(regParam=reg, maxIter=max_iter, labelCol="label"))
+        for reg in regs
+    ))
 
 
 def kmeans_centers(

@@ -56,13 +56,13 @@ def global_prefix_sum(
 
     ``value_col``/``out_col`` may be lists (same length) to compute
     several prefix sums in ONE pass — one range shuffle, one local
-    window, one P-row driver exchange, however many scans ride along.
+    window, one P-row offset broadcast, however many scans ride along.
 
     ``total_col`` (optional, aligned with ``out_col``) attaches each
-    value column's GRAND total as a literal column: the driver already
-    summed the per-bucket totals, so the number is known exactly —
-    callers that need "cumulative / total" (CDFs, running shares) get
-    it with NO second pass over the input and no one-row cross join.
+    value column's GRAND total: it is summed over the same P per-bucket
+    totals that give the offsets and rides their broadcast, so callers
+    that need "cumulative / total" (CDFs, running shares) get it with
+    NO second pass over the input and no one-row cross join.
 
     PRECONDITION (documented, not just implied): the order defined by
     ``order_exprs`` (default: ``order_col`` ascending) must be TOTAL —
@@ -75,7 +75,7 @@ def global_prefix_sum(
     NULL handling matches the naive global window exactly: SQL's SUM
     ignores NULLs, and a running sum is NULL only while no non-NULL
     value has occurred yet — so the rewrite tracks the running non-NULL
-    COUNT alongside the running sum (same P-row driver exchange) and
+    COUNT alongside the running sum (same P-row offset broadcast) and
     emits NULL precisely when that count is zero.
     """
     value_cols = [value_col] if isinstance(value_col, str) else list(value_col)
@@ -176,7 +176,7 @@ def global_prefix_sum(
     for oc, tc in zip(out_cols, total_cols):
         if tc is not None:
             # grand total: NULL only when NO non-NULL value exists at
-            # all (the driver loop's counts==0 case)
+            # all (grand non-NULL count 0)
             out = out.withColumn(
                 tc, F.when(F.col(f"_gn_{oc}") > 0, F.col(f"_g_{oc}"))
             )
@@ -268,19 +268,3 @@ def percent_rank_from_rank(rn: Column, n: Column) -> Column:
     0/0 (NULL, or an ANSI error)."""
     return F.when(n > 1, (rn - 1).cast("double") / (n - 1)).otherwise(F.lit(0.0))
 
-
-def with_global_rank_and_count(
-    df: DataFrame,
-    order_exprs,
-    rn_col: str = "rn",
-    n_col: str = "_n",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Convenience composition for derived ntile / percent_rank: the
-    two-phase global row number plus the total count — the two inputs
-    :func:`ntile_from_rank` / :func:`percent_rank_from_rank` need.  The
-    count rides the per-bucket offset broadcast, so there is no second
-    pass over the input and no cross join."""
-    return global_row_number(
-        df, order_exprs, out_col=rn_col, n_buckets=n_buckets, n_col=n_col
-    )

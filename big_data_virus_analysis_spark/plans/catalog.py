@@ -56,7 +56,9 @@ def _plogp2_sql(p: str) -> str:
 
 def _entropy2_sql(x: str, y: str) -> str:
     p = f"(CAST({x} AS DOUBLE) / CAST({y} AS DOUBLE))"
-    return f"({_plogp2_sql(p)} + {_plogp2_sql(f'(1.0 - {p})')})"
+    # an empty partition (y = 0) scores 0.0, as in functions/entropy.py
+    h = f"{_plogp2_sql(p)} + {_plogp2_sql(f'(1.0 - {p})')}"
+    return f"(CASE WHEN {y} = 0 THEN 0.0 ELSE {h} END)"
 
 
 def _info_gain_sql(p: str, t: str, pg: str, tg: str) -> str:
@@ -96,17 +98,18 @@ def _q_info_gain_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("token", "pos_df", "neg_df", "info_gain", "rank")
 
 
-_IG_EXPR = _info_gain_sql("p", "t", "pos_df", "(pos_df + neg_df)")
+def _sql_ig_vocab(tok_cte: str, totals_cte: str, k: int) -> str:
+    """DuckDB twin of ``info_gain_ranking`` as an open WITH chain.
 
-_SQL_INFO_GAIN_TOPK = f"""
-WITH tok AS (
-  SELECT doc_id AS doc,
-         CASE WHEN lang = 'en' THEN 'pos' ELSE 'neg' END AS cls,
-         unnest(string_split(text, ' ')) AS token
-  FROM documents
-), tok_ne AS (
-  SELECT * FROM tok WHERE length(token) > 0
-), dedup AS (
+    ``tok_cte`` defines ``tok_ne(doc, cls, token)`` (non-empty tokens,
+    repeats allowed) after any CTEs it needs; ``totals_cte`` selects the
+    one-row ``(p, t)`` document totals.  The chain ends in ``dedup(doc,
+    cls, token)`` and ``vocab(token, pos_df, neg_df, info_gain, rank)``,
+    the top ``k`` by (IG desc, token asc) — append the final SELECT.
+    """
+    ig = _info_gain_sql("p", "t", "pos_df", "(pos_df + neg_df)")
+    return f"""
+WITH {tok_cte}, dedup AS (
   SELECT DISTINCT doc, cls, token FROM tok_ne
 ), freq AS (
   SELECT token,
@@ -114,23 +117,36 @@ WITH tok AS (
          count(*) FILTER (WHERE cls = 'neg') AS neg_df
   FROM dedup GROUP BY token
 ), totals AS (
-  SELECT count(*) FILTER (WHERE lang = 'en') AS p, count(*) AS t
-  FROM documents
+  {totals_cte}
 ), scored AS (
-  SELECT token, pos_df, neg_df,
-         round({_nan_to_zero_sql("ig_raw")}, 6) AS info_gain
-  FROM (
-    SELECT token, pos_df, neg_df,
-           {_IG_EXPR} AS ig_raw
-    FROM freq CROSS JOIN totals
-    WHERE pos_df > 0 AND neg_df > 0
-  )
+  SELECT token, pos_df, neg_df, round({_nan_to_zero_sql(ig)}, 6) AS info_gain
+  FROM freq CROSS JOIN totals
+  WHERE pos_df > 0 AND neg_df > 0
+), vocab AS (
+  SELECT token, pos_df, neg_df, info_gain,
+         CAST(row_number() OVER (ORDER BY info_gain DESC, token ASC) AS INT) AS rank
+  FROM scored
+  QUALIFY rank <= {k}
 )
-SELECT token, pos_df, neg_df, info_gain,
-       CAST(row_number() OVER (ORDER BY info_gain DESC, token ASC) AS INT) AS rank
-FROM scored
-QUALIFY rank <= {IG_TOPK}
 """
+
+
+# (doc, cls, token) of the synthetic `documents` table, the SQL twin of
+# operators/features.py::document_tokens, and its class totals
+_SQL_DOC_TOK = """tok AS (
+  SELECT doc_id AS doc,
+         CASE WHEN lang = 'en' THEN 'pos' ELSE 'neg' END AS cls,
+         unnest(string_split(text, ' ')) AS token
+  FROM documents
+), tok_ne AS (
+  SELECT * FROM tok WHERE length(token) > 0
+)"""
+_SQL_DOC_TOTALS = """SELECT count(*) FILTER (WHERE lang = 'en') AS p, count(*) AS t
+  FROM documents"""
+
+_SQL_INFO_GAIN_TOPK = (
+    _sql_ig_vocab(_SQL_DOC_TOK, _SQL_DOC_TOTALS, IG_TOPK) + "SELECT * FROM vocab\n"
+)
 
 # --------------------------------------------------------------------------
 # Core relational pack (SURVEY.md §2.1-2.8 over the synthetic star schema)
@@ -1313,7 +1329,14 @@ CATALOG.update(
 # rows-only here — DuckDB views cover only the synthetic tables)
 # --------------------------------------------------------------------------
 
-from ..sources.api_logs import api_log_tokens, read_api_logs  # noqa: E402
+from ..sources.api_logs import (  # noqa: E402
+    api_log_byte_tokens,
+    api_log_doc_classes,
+    api_log_feature_chain,
+    api_log_libsvm_lines,
+    api_log_tokens,
+    read_api_logs,
+)
 
 _REF_CLEAN = "/root/reference/api_logs/clean_LOGS_CONVERTED"
 _REF_VIRUS = "/root/reference/api_logs/virus_LOGS_CONVERTED"
@@ -1325,13 +1348,7 @@ def _q_api_log_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast totals, window top-k (FeatureSelectionCloud.scala:376-442).
     """
     raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos")).otherwise(F.lit("neg")).alias("cls"),
-    ).distinct()
-    return info_gain_ranking(api_log_tokens(raw), k=2000, doc_classes=doc_cls).select(
-        "token", "pos_df", "neg_df", "info_gain", "rank"
-    )
+    return info_gain_ranking(api_log_tokens(raw), k=2000, doc_classes=api_log_doc_classes(raw))
 
 
 def _q_api_log_byte_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1339,24 +1356,17 @@ def _q_api_log_byte_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     FeatureSelectionCloud.scala:257-321) through the same IG ranking —
     dead code in the reference's main() but declared capability
     (SURVEY.md §7 hazard 4)."""
-    from ..sources.api_logs import api_log_byte_tokens
-
     raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos")).otherwise(F.lit("neg")).alias("cls"),
-    ).distinct()
     return info_gain_ranking(
-        api_log_byte_tokens(raw), k=100, doc_classes=doc_cls
-    ).select("token", "pos_df", "neg_df", "info_gain", "rank")
+        api_log_byte_tokens(raw), k=100, doc_classes=api_log_doc_classes(raw)
+    )
 
 
 # DuckDB reads the SAME raw text corpus via read_text(), replicating the
 # class-from-path, basename-doc-id, per-line cleanup, and per-file
 # distinct semantics — the reference flagship gets a full value-hash
 # oracle, not just the committed-golden structural checks.
-_SQL_API_LOG_BASE = """
-WITH files AS (
+_SQL_API_LOG_DOCS = """files AS (
   SELECT filename, content
   FROM read_text('/root/reference/api_logs/*_LOGS_CONVERTED/*.txt')
 ), lines AS (
@@ -1377,58 +1387,30 @@ WITH files AS (
          CASE WHEN class = 'virus' THEN 'pos' ELSE 'neg' END AS cls,
          regexp_replace(raw_line, chr(13) || '$', '') AS raw_line
   FROM lines
-)
-"""
-
-def _sql_api_log_ig(tok_cte: str, k: int) -> str:
-    return _SQL_API_LOG_BASE + f"""
-{tok_cte}
-, dedup AS (
-  SELECT DISTINCT doc, cls, token FROM tok_ne
-), freq AS (
-  SELECT token,
-         count(*) FILTER (WHERE cls = 'pos') AS pos_df,
-         count(*) FILTER (WHERE cls = 'neg') AS neg_df
-  FROM dedup GROUP BY token
-), totals AS (
-  SELECT count(DISTINCT doc) FILTER (WHERE cls = 'pos') AS p,
+)"""
+_SQL_API_LOG_TOTALS = """SELECT count(DISTINCT doc) FILTER (WHERE cls = 'pos') AS p,
          count(DISTINCT doc) AS t
-  FROM docs
-), scored AS (
-  SELECT token, pos_df, neg_df,
-         round({_nan_to_zero_sql("ig_raw")}, 6) AS info_gain
-  FROM (
-    SELECT token, pos_df, neg_df,
-           {_IG_EXPR} AS ig_raw
-    FROM freq CROSS JOIN totals
-    WHERE pos_df > 0 AND neg_df > 0
-  )
-)
-SELECT token, pos_df, neg_df, info_gain,
-       CAST(row_number() OVER (ORDER BY info_gain DESC, token ASC) AS INT) AS rank
-FROM scored
-QUALIFY rank <= {k}
-"""
-
-
-_SQL_API_LOG_INFO_GAIN = _sql_api_log_ig(
-    """, tok AS (
+  FROM docs"""
+_SQL_API_LOG_TOK = _SQL_API_LOG_DOCS + """, tok AS (
   SELECT doc, cls, regexp_replace(raw_line, '[ +\\-\\r]', '', 'g') AS token FROM docs
 ), tok_ne AS (
   SELECT * FROM tok WHERE length(token) > 0
-)""",
-    k=2000,
+)"""
+
+_SQL_API_LOG_INFO_GAIN = (
+    _sql_ig_vocab(_SQL_API_LOG_TOK, _SQL_API_LOG_TOTALS, 2000) + "SELECT * FROM vocab\n"
 )
 
-_SQL_API_LOG_BYTE_INFO_GAIN = _sql_api_log_ig(
-    """, tok AS (
+_SQL_API_LOG_BYTE_INFO_GAIN = _sql_ig_vocab(
+    _SQL_API_LOG_DOCS + """, tok AS (
   SELECT doc, cls, upper(substr(raw_line, CAST(i AS INT), 14)) AS token
   FROM docs, unnest(generate_series(1, length(raw_line) - 13)) AS t(i)
 ), tok_ne AS (
   SELECT * FROM tok WHERE length(token) = 14
 )""",
-    k=100,
-)
+    _SQL_API_LOG_TOTALS,
+    100,
+) + "SELECT * FROM vocab\n"
 
 
 CATALOG.update(
@@ -1577,37 +1559,8 @@ from ..operators.vectorize import (  # noqa: E402
 
 VOCAB_K = 100
 
-# the IG CTE chain (everything before final ranking) shared by the
-# vectorization oracles
-_SQL_IG_RANKED_VOCAB = f"""
-WITH tok AS (
-  SELECT doc_id AS doc,
-         CASE WHEN lang = 'en' THEN 'pos' ELSE 'neg' END AS cls,
-         unnest(string_split(text, ' ')) AS token
-  FROM documents
-), tok_ne AS (
-  SELECT * FROM tok WHERE length(token) > 0
-), dedup AS (
-  SELECT DISTINCT doc, cls, token FROM tok_ne
-), freq AS (
-  SELECT token,
-         count(*) FILTER (WHERE cls = 'pos') AS pos_df,
-         count(*) FILTER (WHERE cls = 'neg') AS neg_df
-  FROM dedup GROUP BY token
-), totals AS (
-  SELECT count(*) FILTER (WHERE lang = 'en') AS p, count(*) AS t
-  FROM documents
-), scored AS (
-  SELECT token,
-         round({_nan_to_zero_sql(_IG_EXPR)}, 6) AS info_gain
-  FROM freq CROSS JOIN totals
-  WHERE pos_df > 0 AND neg_df > 0
-), vocab AS (
-  SELECT token, CAST(row_number() OVER (ORDER BY info_gain DESC, token ASC) AS INT) AS rank
-  FROM scored
-  QUALIFY rank <= {VOCAB_K}
-)
-"""
+# the IG vocab CTE chain shared by the vectorization oracles
+_SQL_IG_RANKED_VOCAB = _sql_ig_vocab(_SQL_DOC_TOK, _SQL_DOC_TOTALS, VOCAB_K)
 
 
 def _ranked_vocab(spark: SparkSession, sf_dir: str):
@@ -1641,13 +1594,15 @@ def _q_vectorize_libsvm_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return libsvm_text(doc_vectors(toks, vocab))
 
 
-_SQL_VECTORIZE_LIBSVM_LINES = _SQL_IG_RANKED_VOCAB + """
+# LIBSVM lines of the dedup/vocab CTEs (operators/vectorize.py::libsvm_text)
+_SQL_LIBSVM_LINES = """
 SELECT d.doc,
        CAST(CASE WHEN any_value(d.cls) = 'pos' THEN 1.0 ELSE 0.0 END AS VARCHAR)
          || ' ' || string_agg(v.rank || ':1', ' ' ORDER BY v.rank) AS line
 FROM dedup d JOIN vocab v USING (token)
 GROUP BY d.doc
 """
+_SQL_VECTORIZE_LIBSVM_LINES = _SQL_IG_RANKED_VOCAB + _SQL_LIBSVM_LINES
 
 
 def _document_feature_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1898,20 +1853,10 @@ def reference_pipeline_samples(spark: SparkSession) -> DataFrame:
     structs (:106-135).  Consumed by the report-line and d3-tree
     builders; the chain is pinned end-to-end by a committed self-golden
     hash in tests/test_reference_parity.py."""
-    raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("cls"),
-    ).distinct()
-    toks = api_log_tokens(raw)
-    ranked = info_gain_ranking(toks, k=2000, doc_classes=doc_cls).transform(
-        tracked_cache
-    )
+    ranked, vectors = api_log_feature_chain(spark, _REF_CLEAN, _REF_VIRUS)
+    ranked = ranked.transform(tracked_cache)
     vocab = ranked.select("token", "rank")
     n_features = ranked.count()  # survivor count sizes the dense vectors
-    vectors = doc_vectors(toks, vocab)
     featured = to_ml_vectors(dense_feature_array(vectors, n_features)).transform(
         tracked_cache
     )
@@ -1950,62 +1895,13 @@ def _q_api_log_feature_job_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic end-to-end half of the reference workload (everything
     main() writes except the seeded-KMeans leg), benchmarked in
     bench.py HEADLINE against BASELINE.md's ≈3,200-job design note.
-    Token explode is tracked_cache'd — it feeds both the vocab ranking
-    and the vectorize probe."""
-    raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("cls"),
-    ).distinct()
-    toks = api_log_tokens(raw).transform(tracked_cache)
-    vocab = info_gain_ranking(toks, k=2000, doc_classes=doc_cls).select(
-        "token", "rank"
-    )
-    # input_file_name() URL-encodes spaces (%20); the corpus filenames
-    # contain spaces and nothing else that encodes — decode for the
-    # oracle-comparable doc id (DuckDB read_text keeps literal spaces)
-    return libsvm_text(doc_vectors(toks, vocab)).select(
-        F.replace(F.col("doc"), F.lit("%20"), F.lit(" ")).alias("doc"), "line"
-    )
+    Doc ids keep their literal spaces, as DuckDB read_text does."""
+    return api_log_libsvm_lines(spark, _REF_CLEAN, _REF_VIRUS)
 
 
-_SQL_API_LOG_FEATURE_JOB_E2E = _SQL_API_LOG_BASE + f"""
-, tok AS (
-  SELECT doc, cls, regexp_replace(raw_line, '[ +\\-\\r]', '', 'g') AS token FROM docs
-), tok_ne AS (
-  SELECT * FROM tok WHERE length(token) > 0
-), dedup AS (
-  SELECT DISTINCT doc, cls, token FROM tok_ne
-), freq AS (
-  SELECT token,
-         count(*) FILTER (WHERE cls = 'pos') AS pos_df,
-         count(*) FILTER (WHERE cls = 'neg') AS neg_df
-  FROM dedup GROUP BY token
-), totals AS (
-  SELECT count(DISTINCT doc) FILTER (WHERE cls = 'pos') AS p,
-         count(DISTINCT doc) AS t
-  FROM docs
-), scored AS (
-  SELECT token, round({_nan_to_zero_sql("ig_raw")}, 6) AS info_gain
-  FROM (
-    SELECT token, pos_df, neg_df, {_IG_EXPR} AS ig_raw
-    FROM freq CROSS JOIN totals
-    WHERE pos_df > 0 AND neg_df > 0
-  )
-), vocab AS (
-  SELECT token,
-         CAST(row_number() OVER (ORDER BY info_gain DESC, token ASC) AS INT) AS rank
-  FROM scored
-  QUALIFY rank <= 2000
+_SQL_API_LOG_FEATURE_JOB_E2E = (
+    _sql_ig_vocab(_SQL_API_LOG_TOK, _SQL_API_LOG_TOTALS, 2000) + _SQL_LIBSVM_LINES
 )
-SELECT d.doc,
-       CAST(CASE WHEN any_value(d.cls) = 'pos' THEN 1.0 ELSE 0.0 END AS VARCHAR)
-         || ' ' || string_agg(v.rank || ':1', ' ' ORDER BY v.rank) AS line
-FROM dedup d JOIN vocab v USING (token)
-GROUP BY d.doc
-"""
 
 
 CATALOG.update(
@@ -2966,9 +2862,9 @@ def _q_user_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-deterministic.
     """
     from ..operators.prefix_sum import (
+        global_row_number,
         ntile_from_rank,
         percent_rank_from_rank,
-        with_global_rank_and_count,
     )
 
     ev = load_table(spark, sf_dir, "events")
@@ -2977,7 +2873,7 @@ def _q_user_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value"
         )
     )
-    ranked = with_global_rank_and_count(
+    ranked = global_row_number(
         per_user, [F.col("total_value").desc(), F.col("user_id").asc()], n_col="n"
     )
     rn, n = F.col("rn"), F.col("n")

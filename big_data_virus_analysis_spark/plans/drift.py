@@ -359,7 +359,7 @@ def _q_gains_by_score_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase distributed scan (operators/prefix_sum.py) — no
     single-partition window over the scored table; cumulative/global
     stats are windows over the 10-row decile aggregate."""
-    from ..operators.prefix_sum import ntile_from_rank, with_global_rank_and_count
+    from ..operators.prefix_sum import global_row_number, ntile_from_rank
 
     emb = load_table(spark, sf_dir, "embeddings")
     xd = "CAST(x AS DOUBLE)"
@@ -371,8 +371,8 @@ def _q_gains_by_score_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
         score.alias("score"),
         (F.col("label") < 5).cast("int").alias("pos"),
     )
-    ranked = with_global_rank_and_count(
-        scored, [F.col("score").desc(), F.col("vec_id").asc()]
+    ranked = global_row_number(
+        scored, [F.col("score").desc(), F.col("vec_id").asc()], n_col="_n"
     )
     deciles = (
         ranked.withColumn(

@@ -280,13 +280,13 @@ def _q_curriculum_quality_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     final position from (decile, shuffle hash).  No single-partition
     window anywhere.
     """
-    from ..operators.prefix_sum import ntile_from_rank, with_global_rank_and_count
+    from ..operators.prefix_sum import ntile_from_rank
     from ..operators.text_quality import quality_score
 
     docs = load_table(spark, sf_dir, "documents")
     scored = quality_score(docs).select("doc_id", "score")
-    ranked = with_global_rank_and_count(
-        scored, [F.col("score").desc(), F.col("doc_id").asc()]
+    ranked = global_row_number(
+        scored, [F.col("score").desc(), F.col("doc_id").asc()], n_col="_n"
     )
     with_decile = ranked.select(
         "doc_id",

@@ -22,7 +22,7 @@ bit-for-bit, so every ML capability has an oracle-visible twin:
 * ``fixed_scorer_auc`` — exact ROC-AUC (Mann–Whitney on score-grouped
   counts, ml/metrics.py) of a deterministic linear scorer.  The SAME
   ``exact_auc_frame`` aggregation computes the grids' AUC column
-  (ml/pipeline.py::_auc), so the dt/svm/lr metric path is
+  (ml/pipeline.py::_grid_auc), so the dt/svm/lr metric path is
   oracle-checked even though training is not (SVMDT.scala:153-179).
 * ``ivf_ann_topk_fixed`` — the full IVF probe plan
   (operators/similarity.py::ivf_topk_fixed) under a fixed coarse

@@ -79,11 +79,11 @@ def _q_equidepth_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window funnels the part table through one task;
     at 100 TB approx_percentile supplies the boundaries without even
     the range shuffle (sketch twin, same output shape)."""
-    from ..operators.prefix_sum import ntile_from_rank, with_global_rank_and_count
+    from ..operators.prefix_sum import global_row_number, ntile_from_rank
 
     part = load_table(spark, sf_dir, "part")
-    ranked = with_global_rank_and_count(
-        part, [F.col("p_retailprice"), F.col("p_partkey")]
+    ranked = global_row_number(
+        part, [F.col("p_retailprice"), F.col("p_partkey")], n_col="_n"
     )
     return (
         ranked.withColumn(

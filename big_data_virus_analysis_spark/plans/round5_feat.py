@@ -33,11 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.graph import copurchase_edges
-from ..operators.prefix_sum import (
-    global_row_number,
-    ntile_from_rank,
-    with_global_rank_and_count,
-)
+from ..operators.prefix_sum import global_row_number, ntile_from_rank
 from ..sources.tables import load_table
 from .catalog import QuerySpec
 
@@ -162,7 +158,7 @@ def _q_rfm_quintile_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def quintile(df: DataFrame, order_exprs, out: str) -> DataFrame:
-        ranked = with_global_rank_and_count(df, order_exprs, rn_col="_rn", n_col="_n")
+        ranked = global_row_number(df, order_exprs, out_col="_rn", n_col="_n")
         return ranked.withColumn(
             out, ntile_from_rank(F.col("_rn"), F.col("_n"), 5).cast("int")
         ).drop("_rn", "_n")

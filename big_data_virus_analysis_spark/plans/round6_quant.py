@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from ..operators.prefix_sum import with_global_rank_and_count
+from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
 
@@ -100,10 +100,10 @@ def _q_quantile_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q", "n")
         .agg(F.min("v").alias("est"))
     )
-    ranked_g = with_global_rank_and_count(
+    ranked_g = global_row_number(
         li.select("v", "l_orderkey", "l_linenumber"),
         [F.asc("v"), F.asc("l_orderkey"), F.asc("l_linenumber")],
-        rn_col="grn",
+        out_col="grn",
         n_col="gn",
     )
     exact_targets = qs.crossJoin(F.broadcast(n_tot)).select(

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.prefix_sum import ntile_from_rank, with_global_rank_and_count
+from ..operators.prefix_sum import global_row_number, ntile_from_rank
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
 from .catalog import QuerySpec
@@ -105,11 +105,8 @@ def _q_theil_sen_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("slope9"),
         )
     )
-    ranked = with_global_rank_and_count(
-        pairs,
-        [F.asc("slope9"), F.asc("xi"), F.asc("xj")],
-        rn_col="rn",
-        n_col="n_pairs",
+    ranked = global_row_number(
+        pairs, [F.asc("slope9"), F.asc("xi"), F.asc("xj")], n_col="n_pairs"
     )
     lo = F.floor((F.col("n_pairs") + 1) / 2)
     hi = F.floor(F.col("n_pairs") / 2) + 1
@@ -261,8 +258,8 @@ def _q_woe_iv_price_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         (F.col("o_orderstatus") == "F").cast("bigint").alias("bad"),
     )
-    ranked = with_global_rank_and_count(
-        base, [F.asc("o_totalprice"), F.asc("o_orderkey")], rn_col="rn", n_col="n"
+    ranked = global_row_number(
+        base, [F.asc("o_totalprice"), F.asc("o_orderkey")], n_col="n"
     )
     binned = ranked.select(
         ntile_from_rank(F.col("rn"), F.col("n"), _WOE_BINS).alias("bin"),

@@ -43,6 +43,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # loud overflow and divide-by-zero must not rest on a version default
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(max(n, 32)))
         .config("spark.default.parallelism", str(max(n, 32)))
         # --- python interop: Arrow batches, never pickled rows ---

@@ -17,7 +17,7 @@ Line format (reference api_logs/*/LOG_API (N)converted.txt):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Class-name constants (reference readme.md:51 — 0.0 clean, 1.0 virus).
@@ -62,30 +62,27 @@ def clean_tokens(raw: DataFrame) -> DataFrame:
     )
 
 
-def file_features(raw: DataFrame) -> DataFrame:
-    """Per-file distinct token sets — the document-frequency unit.
+def _doc_cls() -> list[Column]:
+    """The document identity of an api-log row: ``doc`` is the
+    class-qualified file name (clean/ and virus/ dirs reuse the same
+    basenames, LOG_API (N)converted.txt, so the bare name is not an
+    identity) and ``cls`` is ``pos`` for virus (label 1.0, reference
+    readme.md:51)."""
+    return [
+        F.concat_ws("/", "class", "file").alias("doc"),
+        F.when(F.col("class") == VIRUS, F.lit("pos")).otherwise(F.lit("neg")).alias("cls"),
+    ]
 
-    The reference deduped per-file RDDs one at a time
-    (FeatureSelectionCloud.scala:314,337); here it is one corpus-wide
-    ``dropDuplicates`` — a single hash-aggregate shuffle keyed on
-    (file, api), partial aggregation map-side.
-    """
-    return clean_tokens(raw).dropDuplicates(["file", "class", "api"])
+
+def api_log_doc_classes(raw: DataFrame) -> DataFrame:
+    """One ``(doc, cls)`` row per scanned file — the IG document totals."""
+    return raw.select(*_doc_cls()).distinct()
 
 
 def api_log_tokens(raw: DataFrame) -> DataFrame:
     """Adapt the api-log corpus to the generic feature-selection shape
-    ``(doc, cls, token)`` consumed by ``operators.features`` — virus is
-    the positive class (label 1.0, reference readme.md:51).
-    """
-    return clean_tokens(raw).select(
-        # class-qualified id: clean/ and virus/ dirs reuse the same
-        # basenames (LOG_API (N)converted.txt), so the bare file name
-        # is not a document identity
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == VIRUS, F.lit("pos")).otherwise(F.lit("neg")).alias("cls"),
-        F.col("api").alias("token"),
-    )
+    ``(doc, cls, token)`` consumed by ``operators.features``."""
+    return clean_tokens(raw).select(*_doc_cls(), F.col("api").alias("token"))
 
 
 def api_log_byte_tokens(raw: DataFrame, width: int = 14) -> DataFrame:
@@ -101,7 +98,43 @@ def api_log_byte_tokens(raw: DataFrame, width: int = 14) -> DataFrame:
     from ..functions.text import shingles
 
     return raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == VIRUS, F.lit("pos")).otherwise(F.lit("neg")).alias("cls"),
-        F.explode(shingles(F.col("raw_line"), width=width)).alias("token"),
+        *_doc_cls(), F.explode(shingles(F.col("raw_line"), width=width)).alias("token")
     ).where(F.length("token") == width)
+
+
+def api_log_feature_chain(
+    spark: SparkSession, clean_dir: str, virus_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The reference FeatureSelectionCloud chain over one corpus: scan →
+    tokens → information-gain top-2000 (:376-442) → vocab → per-doc
+    vectors (:494-519).
+
+    Returns ``(ranked, vectors)``: ``ranked`` is
+    ``info_gain_ranking``'s ``(token, pos_df, neg_df, info_gain, rank)``
+    and ``vectors`` is ``doc_vectors``' ``(doc, label, indices)``.  The
+    IG totals count every scanned file, token-less ones included, as
+    the reference's bucket listing did (FeatureSelectionCloud.scala
+    :122-123).  The token frame feeds both the ranking and the vectors,
+    so it is tracked-cached.
+    """
+    from ..operators.caching import tracked_cache
+    from ..operators.features import info_gain_ranking
+    from ..operators.vectorize import doc_vectors
+
+    raw = read_api_logs(spark, clean_dir, virus_dir)
+    toks = api_log_tokens(raw).transform(tracked_cache)
+    ranked = info_gain_ranking(toks, k=2000, doc_classes=api_log_doc_classes(raw))
+    return ranked, doc_vectors(toks, ranked.select("token", "rank"))
+
+
+def api_log_libsvm_lines(spark: SparkSession, clean_dir: str, virus_dir: str) -> DataFrame:
+    """``(doc, line)`` LIBSVM rows of :func:`api_log_feature_chain` with
+    the doc id spelled as on disk: ``input_file_name()`` URL-encodes
+    spaces (%20), and the corpus file names contain spaces and nothing
+    else that encodes."""
+    from ..operators.vectorize import libsvm_text
+
+    _, vectors = api_log_feature_chain(spark, clean_dir, virus_dir)
+    return libsvm_text(vectors).select(
+        F.replace(F.col("doc"), F.lit("%20"), F.lit(" ")).alias("doc"), "line"
+    )

@@ -15,7 +15,9 @@ Conventions preserved from the reference:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..operators.vectorize import libsvm_text
+from .sinks import write_report_text
 
 
 def read_libsvm(spark: SparkSession, path: str, num_features: int | None = None) -> DataFrame:
@@ -26,27 +28,7 @@ def read_libsvm(spark: SparkSession, path: str, num_features: int | None = None)
     return reader.load(path)
 
 
-def libsvm_lines(vectors: DataFrame) -> DataFrame:
-    """Render ``(label: double, indices: array<int>)`` rows as LIBSVM text.
-
-    ``indices`` are 1-based ranks, already sorted ascending.  Pure column
-    expressions: ``transform`` + ``concat_ws`` — no UDF, no driver hop.
-    """
-    return vectors.select(
-        F.concat_ws(
-            " ",
-            F.col("label").cast("string"),
-            F.concat_ws(
-                " ",
-                F.transform("indices", lambda i: F.concat(i.cast("string"), F.lit(":1"))),
-            ),
-        ).alias("value")
-    )
-
-
 def write_libsvm_text(vectors: DataFrame, path: str, single_file: bool = False) -> None:
-    """Distributed text write (``coalesce(1)`` only for small golden files)."""
-    out = libsvm_lines(vectors)
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)
+    """Distributed text write of ``doc_vectors`` output ``(doc, label,
+    indices)`` (``coalesce(1)`` only for small golden files)."""
+    write_report_text(libsvm_text(vectors), path, single_file=single_file)

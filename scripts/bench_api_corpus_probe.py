@@ -32,8 +32,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 REF = "/root/reference/api_logs"
 SCALES = (1, 4, 16)
 BASE_TMP = "/tmp/bdva_api_scaled"
@@ -69,38 +67,6 @@ def build_replica(factor: int) -> tuple[str, str]:
     )
 
 
-def e2e_frame(spark, clean_dir: str, virus_dir: str):
-    """The exact chain of plans/catalog.py::_q_api_log_feature_job_e2e,
-    with the corpus directories parametrized."""
-    from big_data_virus_analysis_spark.operators.features import (
-        info_gain_ranking,
-    )
-    from big_data_virus_analysis_spark.operators.vectorize import (
-        doc_vectors,
-        libsvm_text,
-    )
-    from big_data_virus_analysis_spark.operators.caching import tracked_cache
-    from big_data_virus_analysis_spark.sources.api_logs import (
-        api_log_tokens,
-        read_api_logs,
-    )
-
-    raw = read_api_logs(spark, clean_dir, virus_dir)
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("cls"),
-    ).distinct()
-    toks = api_log_tokens(raw).transform(tracked_cache)
-    vocab = info_gain_ranking(toks, k=2000, doc_classes=doc_cls).select(
-        "token", "rank"
-    )
-    return libsvm_text(doc_vectors(toks, vocab)).select(
-        F.replace(F.col("doc"), F.lit("%20"), F.lit(" ")).alias("doc"), "line"
-    )
-
-
 def main() -> None:
     runs = 3
     if "--runs" in sys.argv:
@@ -110,13 +76,14 @@ def main() -> None:
         release_tracked_caches,
     )
     from big_data_virus_analysis_spark.session import get_spark
+    from big_data_virus_analysis_spark.sources.api_logs import api_log_libsvm_lines
 
     spark = get_spark("api-corpus-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     def once(clean_dir: str, virus_dir: str) -> float:
         t0 = time.perf_counter()
-        e2e_frame(spark, clean_dir, virus_dir).write.format("noop").mode(
+        api_log_libsvm_lines(spark, clean_dir, virus_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         dt = time.perf_counter() - t0

@@ -35,7 +35,6 @@ from big_data_virus_analysis_spark.ml.pipeline import (  # noqa: E402
     svm_auc_grid,
     to_ml_vectors,
 )
-from big_data_virus_analysis_spark.operators.features import info_gain_ranking  # noqa: E402
 from big_data_virus_analysis_spark.operators.report import (  # noqa: E402
     d3_tree,
     report_lines,
@@ -43,14 +42,10 @@ from big_data_virus_analysis_spark.operators.report import (  # noqa: E402
 )
 from big_data_virus_analysis_spark.operators.vectorize import (  # noqa: E402
     dense_feature_array,
-    doc_vectors,
     libsvm_text,
 )
 from big_data_virus_analysis_spark.session import get_spark  # noqa: E402
-from big_data_virus_analysis_spark.sources.api_logs import (  # noqa: E402
-    api_log_tokens,
-    read_api_logs,
-)
+from big_data_virus_analysis_spark.sources.api_logs import api_log_feature_chain  # noqa: E402
 from big_data_virus_analysis_spark.sources.sinks import write_report_text  # noqa: E402
 
 REF = "/root/reference/api_logs"
@@ -80,17 +75,10 @@ def main() -> None:
     spark = get_spark("bdva-reference-pipeline")
     spark.sparkContext.setLogLevel("ERROR")
 
-    raw = read_api_logs(spark, clean_dir, virus_dir).cache()
-    doc_cls = raw.select(
-        F.concat_ws("/", "class", "file").alias("doc"),
-        F.when(F.col("class") == "virus", F.lit("pos"))
-        .otherwise(F.lit("neg"))
-        .alias("cls"),
-    ).distinct()
-    toks = api_log_tokens(raw)
+    ranked, vectors = api_log_feature_chain(spark, clean_dir, virus_dir)
 
     # ---- FeatureSelectionCloud: IG ranking -> topFeatures.txt ----------
-    ranked = info_gain_ranking(toks, k=2000, doc_classes=doc_cls).cache()
+    ranked = ranked.cache()
     top_features = ranked.orderBy("rank").select(
         F.concat(
             F.lit("("), F.col("token"), F.lit(","),
@@ -103,7 +91,7 @@ def main() -> None:
     n_features = ranked.count()
 
     # ---- FeatureSelectionCloud: vectorize -> LIBSVMOutput.txt ----------
-    vectors = doc_vectors(toks, vocab).cache()
+    vectors = vectors.cache()
     write_report_text(
         libsvm_text(vectors).orderBy("doc"),
         f"{out_dir}/LIBSVMOutput.txt",

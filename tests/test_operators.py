@@ -332,11 +332,11 @@ def test_libsvm_write_read_roundtrip(spark, tmp_path):
     )
 
     rows = [
-        (1.0, [1, 3, 7]),
-        (0.0, [2, 7]),
-        (1.0, [5]),
+        (1, 1.0, [1, 3, 7]),
+        (2, 0.0, [2, 7]),
+        (3, 1.0, [5]),
     ]
-    df = spark.createDataFrame(rows, "label double, indices array<int>")
+    df = spark.createDataFrame(rows, "doc long, label double, indices array<int>")
     path = str(tmp_path / "libsvm_out")
     write_libsvm_text(df, path, single_file=True)
 
@@ -344,7 +344,7 @@ def test_libsvm_write_read_roundtrip(spark, tmp_path):
     got = sorted(
         (r["label"], tuple(int(i) for i in r["features"].indices)) for r in back
     )
-    want = sorted((lbl, tuple(i - 1 for i in idxs)) for lbl, idxs in rows)
+    want = sorted((lbl, tuple(i - 1 for i in idxs)) for _, lbl, idxs in rows)
     assert got == want
     # all stored values are 1.0 (binary presence)
     for r in back:
@@ -864,9 +864,9 @@ def test_global_row_number_and_derived_ntile(spark):
     from pyspark.sql import Window
 
     from big_data_virus_analysis_spark.operators.prefix_sum import (
+        global_row_number,
         ntile_from_rank,
         percent_rank_from_rank,
-        with_global_rank_and_count,
     )
 
     for n in (1, 23, 40, 101):
@@ -884,7 +884,7 @@ def test_global_row_number_and_derived_ntile(spark):
                 F.round(F.percent_rank().over(w), 6).alias("pr"),
             ).collect()
         }
-        ranked = with_global_rank_and_count(df, order, n_buckets=7)
+        ranked = global_row_number(df, order, n_buckets=7, n_col="_n")
         rn_c, n_c = F.col("rn"), F.col("_n")
         two = {
             r.id: (r.rn, r.tile, r.pr)

@@ -17,6 +17,8 @@ reference's own golden artifacts:
 
 from __future__ import annotations
 
+import math
+import os
 import re
 
 import pytest
@@ -28,8 +30,9 @@ from big_data_virus_analysis_spark.operators.vectorize import (
     libsvm_text,
 )
 from big_data_virus_analysis_spark.sources.api_logs import (
+    api_log_feature_chain,
+    api_log_libsvm_lines,
     api_log_tokens,
-    file_features,
     read_api_logs,
 )
 
@@ -67,8 +70,8 @@ def test_corpus_statistics(raw_logs):
 
 
 def test_distinct_cleaned_tokens(raw_logs):
-    feats = file_features(raw_logs)
-    assert feats.select("api").distinct().count() == 124  # BASELINE.md
+    toks = api_log_tokens(raw_logs)
+    assert toks.select("token").distinct().count() == 124  # BASELINE.md
 
 
 # The committed topFeatures.txt is NOT reproducible from the committed
@@ -304,3 +307,99 @@ def test_reference_pipeline_self_golden(spark):
     assert tdigest == (
         "5896c0dc3cdd86f45a4eaed335676bd1b757cf7f1d5ad86d50128c375187fe79"
     )
+
+
+# --------------------------------------------------------------------------
+# The shared api-log chain on a tiny corpus written by the test itself, so
+# it runs without the reference checkout.
+# --------------------------------------------------------------------------
+
+#: (class dir, file name) -> API calls, one per line.  The same basename
+#: occurs in both classes, names carry spaces, NtClose is in every file
+#: that has tokens, and clean-only / virus-only APIs drop out of IG.
+_TINY_CORPUS = {
+    ("clean", "LOG_API (1)converted.txt"): ["NtClose", "ReadFile", "ReadFile", "RegOpenKey"],
+    ("clean", "LOG_API (2)converted.txt"): ["NtClose", "CreateFile", "ReadFile"],
+    ("clean", "LOG_API (3)converted.txt"): ["NtClose", "CloseHandle"],
+    ("virus", "LOG_API (1)converted.txt"): ["NtClose", "WriteProcessMemory", "CreateFile"],
+    ("virus", "LOG_API (2)converted.txt"): ["NtClose", "WriteProcessMemory", "RegOpenKey"],
+    ("virus", "LOG_API (4)converted.txt"): ["NtClose", "CreateFile", "VirtualAlloc"],
+}
+
+
+def _h2(x: int, y: int) -> float:
+    if y == 0:  # empty partition: the reference's NaN, replaced by 0
+        return 0.0
+    p = x / y
+    return sum(-q * math.log2(q) for q in (p, 1.0 - p) if q > 0)
+
+
+@pytest.mark.parametrize("with_tokenless_file", [False, True])
+def test_api_log_chain_on_written_corpus(spark, tmp_path, with_tokenless_file):
+    """api_log_feature_chain over a corpus in the reference grammar
+    (bare `` -``/`` +`` marker line, CRLF) against a pure-Python IG and
+    LIBSVM rendering, and against the DuckDB oracles of
+    ``api_log_info_gain`` / ``api_log_feature_job_e2e`` on the same files.
+
+    Without the token-less file NtClose occurs in every document, so the
+    t − tg entropy term is over zero documents and must score 0 instead
+    of dividing by zero; with it, the marker-only file still counts in
+    the IG totals (the reference counted the bucket listing)."""
+    import duckdb
+
+    from big_data_virus_analysis_spark.plans.catalog import _REF_CLEAN, CATALOG
+
+    corpus = dict(_TINY_CORPUS)
+    if with_tokenless_file:
+        corpus[("virus", "LOG_API (5)converted.txt")] = []
+    marks = {"clean": "-", "virus": "+"}
+    for (cls, name), apis in corpus.items():
+        d = tmp_path / f"{cls}_LOGS_CONVERTED"
+        d.mkdir(exist_ok=True)
+        body = "".join(f"{a} {marks[cls]}\r\n" for a in apis)
+        (d / name).write_bytes(f" {marks[cls]}\r\n{body}".encode())
+
+    # pure-Python reference: per-file token sets, document frequencies, IG
+    docs = {f"{c}/{n}": ("pos" if c == "virus" else "neg", set(a)) for (c, n), a in corpus.items()}
+    t = len(docs)
+    p = sum(1 for c, _ in docs.values() if c == "pos")
+    want_ig = {}
+    for tok in {tok for _, toks in docs.values() for tok in toks}:
+        pg = sum(1 for c, toks in docs.values() if c == "pos" and tok in toks)
+        tg = sum(1 for _, toks in docs.values() if tok in toks)
+        if 0 < pg < tg:  # present in both classes
+            want_ig[tok] = round(
+                _h2(p, t) - tg / t * _h2(pg, tg) - (t - tg) / t * _h2(p - pg, t - tg), 6
+            )
+    assert all("NtClose" in toks for _, toks in docs.values()) is not with_tokenless_file
+
+    dirs = (str(tmp_path / "clean_LOGS_CONVERTED"), str(tmp_path / "virus_LOGS_CONVERTED"))
+    ranked, _ = api_log_feature_chain(spark, *dirs)
+    got = sorted(ranked.collect(), key=lambda r: r["rank"])
+    assert {r["token"]: r["info_gain"] for r in got} == pytest.approx(want_ig, abs=1e-6)
+    assert [r["rank"] for r in got] == list(range(1, len(want_ig) + 1))
+    assert [r["token"] for r in got] == [
+        r["token"] for r in sorted(got, key=lambda r: (-r["info_gain"], r["token"]))
+    ]
+
+    # LIBSVM lines keyed by doc id `class/file name`, spaces and all
+    rank = {r["token"]: r["rank"] for r in got}
+    want_lines = {}
+    for doc, (cls, toks) in docs.items():
+        idx = sorted(rank[tok] for tok in toks if tok in rank)
+        if idx:
+            label = "1.0" if cls == "pos" else "0.0"
+            want_lines[doc] = " ".join([label, *(f"{i}:1" for i in idx)])
+    rows = api_log_libsvm_lines(spark, *dirs).collect()
+    assert {r["doc"]: r["line"] for r in rows} == want_lines
+    assert len(rows) == len(want_lines)
+
+    # the DuckDB oracles read the same files, independently of Spark
+    def oracle(name):
+        sql = CATALOG[name].oracle.replace(os.path.dirname(_REF_CLEAN), str(tmp_path))
+        return duckdb.sql(sql).fetchall()
+
+    assert sorted(oracle("api_log_info_gain")) == sorted(
+        (r["token"], r["pos_df"], r["neg_df"], r["info_gain"], r["rank"]) for r in got
+    )
+    assert dict(oracle("api_log_feature_job_e2e")) == want_lines
