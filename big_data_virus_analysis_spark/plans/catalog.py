@@ -600,13 +600,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     tracked caches of entries built before it, because evaluation is
     lazy and the builder cannot know when a caller finishes collecting.
     Build one query, consume its DataFrame fully, then build the next —
-    the sequential pattern the driver and bench.py follow.  A caller
-    that builds several DataFrames up front and collects them later
-    still gets CORRECT results, but the earlier queries' build-then-
-    probe caches are gone by collection time, so their self-join
-    branches silently recompute.  For that access pattern call
-    ``CATALOG[name].spark`` directly and manage
-    ``operators.caching.release_tracked_caches()`` yourself.
+    the sequential pattern the driver and bench.py follow.
+
+    A caller that builds several DataFrames up front and collects them
+    later is NOT guaranteed correct results.  Every consumer of
+    ``operators.prefix_sum.global_prefix_sum`` / ``global_row_number``
+    pins its bucket ids only with a tracked cache; once the next build
+    releases it, collection re-runs the range exchange, which can sample
+    different partition bounds for the running-sum branch and the
+    bucket-totals branch, and the answer is silently wrong.  The other
+    queries stay correct but lose their build-then-probe caches and
+    recompute.  For that access pattern call ``CATALOG[name].spark``
+    directly and collect each frame before calling
+    ``operators.caching.release_tracked_caches()``.  The fix is ROADMAP
+    direction 2a: bucket ids from a deterministic splitter table, so
+    the primitive needs no cache.
     """
     return {name: _self_cleaning(spec.spark) for name, spec in CATALOG.items()}
 

@@ -53,17 +53,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
-
-
-def _day_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.groupBy(
-        F.col("o_orderdate").cast("date").alias("day")
-    ).agg(
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-        ).alias("cents")
-    )
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 
 def _lis_fold(values: str, cmp: str) -> str:
@@ -82,7 +72,7 @@ def _lis_fold(values: str, cmp: str) -> str:
 
 
 def _q_lis_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    one = _day_cents(spark, sf_dir).agg(
+    one = daily_order_cents(spark, sf_dir).agg(
         F.expr(
             "transform(sort_array(collect_list(struct(day, cents))),"
             " s -> s.cents)"
@@ -123,12 +113,7 @@ def _sql_lis_fold(values: str, cmp: str) -> str:
 
 
 _SQL_LIS = f"""
-WITH days AS MATERIALIZED (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders GROUP BY 1
-), one AS MATERIALIZED (
+WITH days AS MATERIALIZED ({SQL_DAILY_ORDER_CENTS}), one AS MATERIALIZED (
   SELECT list(cents ORDER BY day) AS v,
          CAST(count(*) AS BIGINT) AS n_days,
          CAST(count(DISTINCT cents) AS BIGINT) AS n_distinct_values

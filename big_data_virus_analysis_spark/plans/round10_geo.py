@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 
 def _monthly_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,28 +224,16 @@ ORDER BY px, py, qx, qy
 """
 
 
-def _daily_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct daily (epoch-day, cents) points from orders."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(
-                F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-            ).alias("y")
-        )
-        .select(
-            F.datediff("day", F.lit("1970-01-01")).cast("bigint").alias("x"),
-            "y",
-        )
-        .distinct()
-    )
-
-
 def _q_closest_pair_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    pts = tracked_cache(_daily_points(spark, sf_dir))
+    # (epoch day, cents) points; one row per day, so all are distinct
+    pts = tracked_cache(
+        daily_order_cents(spark, sf_dir).select(
+            F.datediff("day", F.lit("1970-01-01")).cast("bigint").alias("x"),
+            F.col("cents").alias("y"),
+        )
+    )
     # phase 1: rank-adjacent upper bound d0 (one partitioned-free
     # window over the bounded day frame is the documented exception —
     # the frame is calendar-bounded, matrix_profile precedent)
@@ -318,17 +307,11 @@ def _q_closest_pair_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CLOSEST_PAIR = """
+_SQL_CLOSEST_PAIR = f"""
 WITH pts AS MATERIALIZED (
-  SELECT DISTINCT
-         CAST(datediff('day', DATE '1970-01-01',
-                       CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
-         CAST(cents AS BIGINT) AS y
-  FROM (
-    SELECT o_orderdate,
-           sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS cents
-    FROM orders GROUP BY o_orderdate
-  )
+  SELECT CAST(datediff('day', DATE '1970-01-01', day) AS BIGINT) AS x,
+         cents AS y
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), adj AS MATERIALIZED (
   SELECT min(CAST(x - nx AS HUGEINT) * CAST(x - nx AS HUGEINT)
              + CAST(y - ny AS HUGEINT) * CAST(y - ny AS HUGEINT)) AS d0

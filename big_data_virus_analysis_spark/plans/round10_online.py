@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 #: ski-rental buy price, in rent-day units
 SKI_B = 10
@@ -255,12 +256,7 @@ ORDER BY k.segment, k.yr
 def _q_max_subarray_daily_kadane(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    days = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-        ).alias("cents")
-    )
+    days = daily_order_cents(spark, sf_dir)
     one = days.agg(
         F.expr(
             "transform(sort_array(collect_list(struct(day AS day,"
@@ -301,13 +297,8 @@ def _q_max_subarray_daily_kadane(
     )
 
 
-_SQL_KADANE = """
-WITH days AS MATERIALIZED (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders GROUP BY 1
-), stats AS MATERIALIZED (
+_SQL_KADANE = f"""
+WITH days AS MATERIALIZED ({SQL_DAILY_ORDER_CENTS}), stats AS MATERIALIZED (
   SELECT CAST(count(*) AS BIGINT) AS n_days,
          CAST(sum(cents) AS BIGINT) AS total_cents
   FROM days
@@ -317,7 +308,7 @@ WITH days AS MATERIALIZED (
   FROM days, stats
 ), pre AS MATERIALIZED (
   SELECT i, sum(d) OVER (ORDER BY i) AS p FROM dev
-), -- prefix identity: best = max_j (p_j - min_{0<=i<j} p_i) with
+), -- prefix identity: best = max_j (p_j - min_{{0<=i<j}} p_i) with
    -- p_0 = 0; Kadane's cur<0 restart keeps the EARLIEST minimal
    -- prefix and its strict best update keeps the earliest end
 low AS MATERIALIZED (
@@ -350,12 +341,7 @@ ORDER BY we LIMIT 1
 
 
 def _q_stock_span_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    days = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.sum(
-            F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-        ).alias("cents")
-    )
+    days = daily_order_cents(spark, sf_dir)
     w = Window.orderBy("day")
     idx = tracked_cache(
         days.select("day", "cents", F.row_number().over(w).alias("i"))
@@ -384,12 +370,7 @@ def _q_stock_span_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_STOCK_SPAN = f"""
-WITH days AS MATERIALIZED (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-              AS BIGINT) AS cents
-  FROM orders GROUP BY 1
-), idx AS MATERIALIZED (
+WITH days AS MATERIALIZED ({SQL_DAILY_ORDER_CENTS}), idx AS MATERIALIZED (
   SELECT day, cents, row_number() OVER (ORDER BY day) AS i FROM days
 ), spans AS MATERIALIZED (
   SELECT a.day, a.cents,

@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 #: job-list year (calendar-bounded frame, ≤ ~365 rows at any SF)
 SCHED_YEAR = 1995
@@ -78,12 +79,9 @@ def _day_jobs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     days = tracked_cache(  # day-job frame: one corpus pass total
-        o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(
-                F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-            ).alias("p_cents")
-        )
+        daily_order_cents(spark, sf_dir)
+        .where(F.year("day") == SCHED_YEAR)
+        .select("day", F.col("cents").alias("p_cents"))
         .join(leads, "day")
     )
     w = Window.orderBy("day")
@@ -167,13 +165,9 @@ WITH o95 AS MATERIALIZED (
   FROM o95 o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
   GROUP BY 1
 ), days AS MATERIALIZED (
-  SELECT d.day, d.p_cents, leads.lead_days
-  FROM (
-    SELECT CAST(o_orderdate AS DATE) AS day,
-           CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-                AS BIGINT) AS p_cents
-    FROM o95 GROUP BY 1
-  ) d JOIN leads USING (day)
+  SELECT d.day, d.cents AS p_cents, leads.lead_days
+  FROM ({SQL_DAILY_ORDER_CENTS}) d JOIN leads USING (day)
+  WHERE year(d.day) = {SCHED_YEAR}
 ), tot AS MATERIALIZED (
   SELECT CAST(sum(p_cents) AS BIGINT) AS total,
          CAST(count(*) AS BIGINT) AS n

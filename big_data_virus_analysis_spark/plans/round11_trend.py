@@ -45,24 +45,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 
-def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(x = epoch day, y = revenue cents) — the calendar-bounded frame."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(
-                F.expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")
-            ).alias("y")
-        )
-        .select(
-            F.datediff("day", F.lit("1970-01-01")).cast("bigint").alias("x"),
-            "y",
-        )
+def _xy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(x = epoch day, y = revenue cents) over the shared day frame."""
+    return daily_order_cents(spark, sf_dir).select(
+        F.datediff("day", F.lit("1970-01-01")).cast("bigint").alias("x"),
+        F.col("cents").alias("y"),
     )
 
 
@@ -85,7 +76,7 @@ def _pairs(days: DataFrame) -> DataFrame:
 def _q_mann_kendall_daily_trend(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    days = tracked_cache(_daily(spark, sf_dir))
+    days = tracked_cache(_xy(spark, sf_dir))
     s_agg = _pairs(days).agg(
         F.sum(
             F.when(F.col("yj") > F.col("yi"), 1)
@@ -162,7 +153,7 @@ def _q_mann_kendall_daily_trend(
 
 
 def _q_theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    days = tracked_cache(_daily(spark, sf_dir))
+    days = tracked_cache(_xy(spark, sf_dir))
     # r11 optimization (guide §2.3/§1.2): the old shape ranked the
     # FULL ~n²/2 pair-slope frame with global_row_number (eager
     # localCheckpoint of 2.9M rows + driver collect) and then scanned
@@ -265,13 +256,11 @@ def _q_theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DAILY = """
+_SQL_DAILY = f"""
 WITH days AS MATERIALIZED (
-  SELECT CAST(date_diff('day', DATE '1970-01-01',
-                        CAST(o_orderdate AS DATE)) AS BIGINT) AS x,
-         CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-              AS BIGINT) AS y
-  FROM orders GROUP BY CAST(o_orderdate AS DATE)
+  SELECT CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS x,
+         cents AS y
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), pairs AS MATERIALIZED (
   SELECT a.x AS xi, a.y AS yi, b.x AS xj, b.y AS yj
   FROM days a JOIN days b ON a.x < b.x

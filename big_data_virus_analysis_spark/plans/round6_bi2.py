@@ -36,6 +36,7 @@ from pyspark.sql import Window
 
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 # --------------------------------------------------------------------------
 # max_drawdown_daily_revenue
@@ -43,26 +44,21 @@ from .catalog import QuerySpec
 
 
 def _q_max_drawdown_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    daily = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.col("o_totalprice").cast("decimal(18,2)").alias("rev"),
-        )
-        .groupBy("day")
-        .agg(F.sum("rev").alias("rev"))
-    )
+    # cents equal the old DECIMAL(18,2) day sum only while prices carry
+    # at most 2 decimals (TPC-H data does): 1.005 casts to 1.01 but
+    # round(1.005 * 100) is 100
+    daily = daily_order_cents(spark, sf_dir)
     # net curve: revenue relative to the running mean is monotone, so
     # drawdown needs a detrended series — use daily revenue minus the
-    # global mean (exact decimals broadcast), cumulated over days
+    # global mean (exact integer cents broadcast), cumulated over days
     tot = daily.agg(
-        F.sum("rev").alias("tot"), F.count(F.lit(1)).alias("n_days")
+        F.sum("cents").alias("tot"), F.count(F.lit(1)).alias("n_days")
     )
     detr = daily.crossJoin(F.broadcast(tot)).select(
         "day",
         (
-            F.col("rev").cast("double")
-            - F.col("tot").cast("double") / F.col("n_days").cast("double")
+            F.col("cents") / 100.0
+            - F.col("tot") / 100.0 / F.col("n_days").cast("double")
         ).alias("x"),
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
@@ -80,16 +76,12 @@ def _q_max_drawdown_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_SQL_MAX_DRAWDOWN_DAILY_REVENUE = """
-WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-  FROM orders GROUP BY 1
-), tot AS (
-  SELECT sum(rev) AS tot, CAST(count(*) AS BIGINT) AS n_days FROM daily
+_SQL_MAX_DRAWDOWN_DAILY_REVENUE = f"""
+WITH daily AS ({SQL_DAILY_ORDER_CENTS}), tot AS (
+  SELECT sum(cents) AS tot, CAST(count(*) AS BIGINT) AS n_days FROM daily
 ), detr AS (
   SELECT day,
-         CAST(rev AS DOUBLE) - CAST(tot AS DOUBLE) / n_days AS x
+         CAST(cents AS DOUBLE) / 100 - CAST(tot AS DOUBLE) / 100 / n_days AS x
   FROM daily CROSS JOIN tot
 ), curve AS (
   SELECT day,

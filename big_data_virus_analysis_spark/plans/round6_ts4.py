@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_prefix_sum
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 # --------------------------------------------------------------------------
 # binseg_changepoint_daily
@@ -226,14 +227,11 @@ _MAD_TOPK = 10
 
 
 def _q_rolling_mad_anomaly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    daily = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.col("o_totalprice").cast("decimal(18,2)").alias("y"),
-        )
-        .groupBy("day")
-        .agg(F.sum("y").cast("double").alias("rev"))
+    # cents equal the old DECIMAL(18,2) day sum only while prices carry
+    # at most 2 decimals (TPC-H data does): 1.005 casts to 1.01 but
+    # round(1.005 * 100) is 100
+    daily = daily_order_cents(spark, sf_dir).select(
+        "day", (F.col("cents") / 100.0).alias("rev")
     )
     anchor = daily.select(F.col("day").alias("d"), F.col("rev").alias("y_d"))
     window = daily.select(F.col("day").alias("e"), F.col("rev").alias("y_e"))
@@ -278,9 +276,8 @@ def _q_rolling_mad_anomaly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_ROLLING_MAD_ANOMALY_DAILY = f"""
 WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
-  FROM orders GROUP BY 1
+  SELECT day, CAST(cents AS DOUBLE) / 100 AS rev
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), band AS (
   SELECT a.day AS d, a.rev AS y_d, w.day AS e, w.rev AS y_e
   FROM daily a

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 _HOUR_US = 3_600_000_000
 _W_FAST = 6 * _HOUR_US
@@ -155,16 +156,9 @@ _SEASON = 7  # days
 
 
 def _q_pinball_mase_forecasts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date"))
-            .cast("bigint")
-            .alias("d"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("d")
-        .agg(F.sum("yc").alias("yc"))
+    day = daily_order_cents(spark, sf_dir).select(
+        F.datediff("day", F.lit("1995-01-01").cast("date")).cast("bigint").alias("d"),
+        F.col("cents").alias("yc"),
     )
     # seasonal-naive forecast: y_hat(d) = y(d - 7); scored on days with
     # both; MASE denominator: naive-1 MAE over the same scored days
@@ -211,10 +205,9 @@ def _q_pinball_mase_forecasts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_PINBALL_MASE_FORECASTS = f"""
 WITH day AS (
-  SELECT CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-              AS BIGINT) AS d,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS yc
-  FROM orders GROUP BY 1
+  SELECT CAST(date_diff('day', DATE '1995-01-01', day) AS BIGINT) AS d,
+         cents AS yc
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), f7 AS (
   SELECT a.yc - s.yc AS e
   FROM day a JOIN day s ON a.d = s.d + {_SEASON}

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 _SEG_A = "AUTOMOBILE"
 _SEG_B = "HOUSEHOLD"
@@ -187,16 +188,9 @@ def _residual_day_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact integer moments cast to double only inside the fixed
     closed form, so every engine computes the identical a/b and the
     identical per-row residual before quantization."""
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date"))
-            .cast("bigint")
-            .alias("i"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("i")
-        .agg(F.sum("yc").alias("yc"))
+    day = daily_order_cents(spark, sf_dir).select(
+        F.datediff("day", F.lit("1995-01-01").cast("date")).cast("bigint").alias("i"),
+        F.col("cents").alias("yc"),
     )
     mom = day.agg(
         F.count(F.lit(1)).alias("n"),
@@ -229,12 +223,11 @@ def _residual_day_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_RESIDUAL_DAY_FRAME = """
+_SQL_RESIDUAL_DAY_FRAME = f"""
 WITH day AS (
-  SELECT CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-              AS BIGINT) AS i,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS yc
-  FROM orders GROUP BY 1
+  SELECT CAST(date_diff('day', DATE '1995-01-01', day) AS BIGINT) AS i,
+         cents AS yc
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), mom AS (
   SELECT count(*) AS n, sum(i) AS sx, sum(i * i) AS sxx, sum(yc) AS sy,
          sum(CAST(i AS HUGEINT) * yc) AS sxy

@@ -43,27 +43,9 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 _HURST_SIZES = (16, 64, 256)
-
-
-def _day_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(F.sum("yc").alias("yc"))
-    )
-
-
-_SQL_DAY_FRAME = """
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS yc
-  FROM orders GROUP BY 1
-"""
 
 
 # --------------------------------------------------------------------------
@@ -72,11 +54,14 @@ _SQL_DAY_FRAME = """
 
 
 def _q_hurst_rescaled_range_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = _day_frame(spark, sf_dir)
+    day = daily_order_cents(spark, sf_dir)
     ranked = global_row_number(day, [F.asc("day")], out_col="rk")
     sizes = spark.createDataFrame([(n,) for n in _HURST_SIZES], "n int")
     expanded = ranked.crossJoin(F.broadcast(sizes)).select(
-        "n", "rk", "yc", ((F.col("rk") - 1) / F.col("n")).cast("bigint").alias("blk")
+        "n",
+        "rk",
+        F.col("cents").alias("yc"),
+        ((F.col("rk") - 1) / F.col("n")).cast("bigint").alias("blk"),
     )
     blk = expanded.groupBy("n", "blk").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("yc").alias("syc")
@@ -159,9 +144,9 @@ def _q_hurst_rescaled_range_daily(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 _SQL_HURST_RESCALED_RANGE_DAILY = f"""
-WITH day AS ({_SQL_DAY_FRAME}),
-ranked AS (
-  SELECT yc, row_number() OVER (ORDER BY day) AS rk FROM day
+WITH ranked AS (
+  SELECT cents AS yc, row_number() OVER (ORDER BY day) AS rk
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), expanded AS (
   SELECT s.n, r.rk, r.yc, CAST((r.rk - 1) // s.n AS BIGINT) AS blk
   FROM ranked r CROSS JOIN (
@@ -299,16 +284,9 @@ _MAD_CONST = 1.4826
 
 
 def _q_huber_irls_step_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.datediff(F.to_date("o_orderdate"), F.lit("1995-01-01").cast("date"))
-            .cast("bigint")
-            .alias("i"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("i")
-        .agg(F.sum("yc").alias("yc"))
+    day = daily_order_cents(spark, sf_dir).select(
+        F.datediff("day", F.lit("1995-01-01").cast("date")).cast("bigint").alias("i"),
+        F.col("cents").alias("yc"),
     )
     mom = day.agg(
         F.count(F.lit(1)).alias("n"),
@@ -402,10 +380,9 @@ def _q_huber_irls_step_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_HUBER_IRLS_STEP_EXACT = f"""
 WITH day AS (
-  SELECT CAST(date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
-              AS BIGINT) AS i,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS yc
-  FROM orders GROUP BY 1
+  SELECT CAST(date_diff('day', DATE '1995-01-01', day) AS BIGINT) AS i,
+         cents AS yc
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), mom AS (
   SELECT count(*) AS n, sum(i) AS sx, sum(i * i) AS sxx, sum(yc) AS sy,
          sum(CAST(i AS HUGEINT) * yc) AS sxy

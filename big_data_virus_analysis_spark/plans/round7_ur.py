@@ -26,23 +26,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_row_number
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 
 def _q_dickey_fuller_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(F.sum("yc").alias("yc"))
-    )
+    day = daily_order_cents(spark, sf_dir)
     ranked = global_row_number(day, [F.asc("day")], out_col="rk")
-    cur = ranked.select("rk", F.col("yc").alias("y1"))
-    prv = ranked.select((F.col("rk") + 1).alias("rk"), F.col("yc").alias("y0"))
+    cur = ranked.select("rk", F.col("cents").alias("y1"))
+    prv = ranked.select((F.col("rk") + 1).alias("rk"), F.col("cents").alias("y0"))
     pairs = cur.join(prv, "rk").select(
         F.col("y0").alias("x"), (F.col("y1") - F.col("y0")).alias("d")
     )
@@ -79,13 +71,10 @@ def _q_dickey_fuller_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_DICKEY_FULLER_DAILY = """
-WITH day AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS yc
-  FROM orders GROUP BY 1
-), ranked AS (
-  SELECT yc, row_number() OVER (ORDER BY day) AS rk FROM day
+_SQL_DICKEY_FULLER_DAILY = f"""
+WITH ranked AS (
+  SELECT cents AS yc, row_number() OVER (ORDER BY day) AS rk
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), pairs AS (
   SELECT b.yc AS x, a.yc - b.yc AS d
   FROM ranked a JOIN ranked b ON a.rk = b.rk + 1

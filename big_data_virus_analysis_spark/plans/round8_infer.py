@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 from .round7_stats import _residual_day_frame, _SQL_RESIDUAL_DAY_FRAME
 
 # --------------------------------------------------------------------------
@@ -321,15 +322,7 @@ _M31 = 2147483648
 
 
 def _q_bootstrap_mean_ci_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(F.sum("yc").alias("yc"))
-    )
+    day = daily_order_cents(spark, sf_dir).withColumnRenamed("cents", "yc")
     ranked = global_row_number(day, [F.asc("day")], out_col="rk", n_col="n")
     ks = spark.range(1, _BOOT_B + 1).select(F.col("id").alias("k"))
     # position i of resample k draws day index hash(i, k) mod n + 1 —
@@ -391,14 +384,10 @@ def _q_bootstrap_mean_ci_det(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_BOOTSTRAP_MEAN_CI_DET = f"""
-WITH day AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS yc
-  FROM orders GROUP BY 1
-), ranked AS (
-  SELECT yc, row_number() OVER (ORDER BY day) AS rk,
+WITH ranked AS (
+  SELECT cents AS yc, row_number() OVER (ORDER BY day) AS rk,
          count(*) OVER () AS n
-  FROM day
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), draws AS (
   SELECT k.k,
          ((r.rk * 2654435761 + k.k * 2246822519) % {_M31}) % r.n + 1 AS idx
@@ -419,7 +408,7 @@ WITH day AS (
 ), full_f AS (
   SELECT count(*) AS n_days,
          round(CAST(sum(yc) AS DOUBLE) / count(*) / 100.0, 6) AS full_mean
-  FROM day
+  FROM ranked
 )
 SELECT CAST(n_days AS BIGINT) AS n_days, full_mean,
        CAST(n_resamples AS INT) AS n_resamples,

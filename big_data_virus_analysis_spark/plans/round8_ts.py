@@ -33,12 +33,13 @@ plans/round7_stats.py (file:line cites there for the shared shapes).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 # --------------------------------------------------------------------------
 # jarque_bera_daily
@@ -48,32 +49,23 @@ from .catalog import QuerySpec
 _JB_UNIT = 100_000
 
 
-def _day_revenue_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
+def _yq() -> Column:
+    """Day revenue in ``_JB_UNIT`` units, rounded half up."""
     return (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(
-            F.floor(F.sum("yc") / F.lit(float(_JB_UNIT)) + 0.5)
-            .cast("bigint")
-            .alias("yq")
-        )
+        F.floor(F.col("cents") / F.lit(float(_JB_UNIT)) + 0.5)
+        .cast("bigint")
+        .alias("yq")
     )
 
 
 _SQL_DAY_REVENUE_QUANTIZED = f"""
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(floor(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-                    / {float(_JB_UNIT)} + 0.5) AS BIGINT) AS yq
-  FROM orders GROUP BY 1
+  SELECT day, CAST(floor(cents / {float(_JB_UNIT)} + 0.5) AS BIGINT) AS yq
+  FROM ({SQL_DAILY_ORDER_CENTS})
 """
 
 
 def _q_jarque_bera_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = _day_revenue_quantized(spark, sf_dir)
+    day = daily_order_cents(spark, sf_dir).select("day", _yq())
     dec = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
     mom = day.agg(
         F.count(F.lit(1)).alias("n"),
@@ -150,7 +142,7 @@ FROM h
 
 
 def _q_pacf_lag2_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = _day_revenue_quantized(spark, sf_dir)
+    day = daily_order_cents(spark, sf_dir).select("day", _yq())
     ranked = global_row_number(day, [F.asc("day")], out_col="rk")
     base = ranked.agg(
         F.count(F.lit(1)).alias("n"),

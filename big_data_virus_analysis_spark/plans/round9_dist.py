@@ -48,6 +48,7 @@ from ..operators.caching import tracked_cache
 from ..operators.prefix_sum import global_prefix_sum
 from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 _W1_YEARS = (1995, 1996)
 #: energy-distance quarters
@@ -197,27 +198,14 @@ GROUP BY n1, n2
 )
 
 
-def _daily_cents(orders: DataFrame, lo: str, hi: str) -> DataFrame:
-    return (
-        orders.where(
-            (F.col("o_orderdate") >= F.lit(lo))
-            & (F.col("o_orderdate") < F.lit(hi))
-        )
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias(
-                "cents"
-            )
-        )
-    )
-
-
 def _q_energy_distance_two_periods(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    da = tracked_cache(_daily_cents(orders, *_ED_A))
-    db = tracked_cache(_daily_cents(orders, *_ED_B))
+    daily = daily_order_cents(spark, sf_dir)
+    da, db = (
+        tracked_cache(daily.where((F.col("day") >= lo) & (F.col("day") < hi)))
+        for lo, hi in (_ED_A, _ED_B)
+    )
 
     def _pair_mean(x: DataFrame, yf: DataFrame, out: str) -> DataFrame:
         a = x.select(F.col("cents").alias("xa"))
@@ -254,18 +242,12 @@ def _q_energy_distance_two_periods(
 
 
 _SQL_ENERGY_DISTANCE_TWO_PERIODS = f"""
-WITH da AS (
-  SELECT CAST(o_orderdate AS DATE) AS d,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS cents
-  FROM orders
-  WHERE o_orderdate >= DATE '{_ED_A[0]}' AND o_orderdate < DATE '{_ED_A[1]}'
-  GROUP BY 1
+WITH daily AS ({SQL_DAILY_ORDER_CENTS}), da AS (
+  SELECT cents FROM daily
+  WHERE day >= DATE '{_ED_A[0]}' AND day < DATE '{_ED_A[1]}'
 ), db AS (
-  SELECT CAST(o_orderdate AS DATE) AS d,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS cents
-  FROM orders
-  WHERE o_orderdate >= DATE '{_ED_B[0]}' AND o_orderdate < DATE '{_ED_B[1]}'
-  GROUP BY 1
+  SELECT cents FROM daily
+  WHERE day >= DATE '{_ED_B[0]}' AND day < DATE '{_ED_B[1]}'
 ), m_ab AS (
   SELECT CAST(sum(abs(a.cents - b.cents)) AS DOUBLE) / count(*) AS m
   FROM da a CROSS JOIN db b

@@ -49,8 +49,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 #: subsequence (window) length in days
 MP_W = 7
@@ -58,28 +58,6 @@ MP_W = 7
 SAX_BREAKS = (-0.6745, 0.0, 0.6745)
 #: SAX word length in days (one word per consecutive block)
 SAX_WORD = 7
-
-
-def _daily_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Observed-day revenue in WHOLE DOLLARS (exact: cent sums then
-    round-half-up), with a dense 1-based day index.  The row_number
-    runs on the calendar-day frame (≤ 2,406 rows — allowlisted)."""
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(
-            F.floor(F.sum("yc") / F.lit(100.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
-    return day.select(
-        F.row_number().over(Window.orderBy("day")).alias("i"), "day", "v"
-    )
 
 
 def _window_stats(daily: DataFrame) -> DataFrame:
@@ -111,9 +89,17 @@ def _window_stats(daily: DataFrame) -> DataFrame:
 
 
 def _q_matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # observed-day revenue in WHOLE DOLLARS (exact: cent sums then
+    # round-half-up) with a dense 1-based day index; the row_number runs
+    # on the calendar-day frame (≤ 2,406 rows — allowlisted)
+    daily = daily_order_cents(spark, sf_dir).select(
+        F.row_number().over(Window.orderBy("day")).alias("i"),
+        "day",
+        F.floor(F.col("cents") / F.lit(100.0) + F.lit(0.5)).cast("bigint").alias("v"),
+    )
     # the window-stats frame feeds BOTH sides of the exclusion-zone
     # self-join — cache it so the fact scan runs once
-    stats = tracked_cache(_window_stats(_daily_dollars(spark, sf_dir)))
+    stats = tracked_cache(_window_stats(daily))
     # the day frame arrives in ONE partition (global row_number) —
     # spread the PROBE side so the ~2.9M-pair nested loop and its
     # per-pair arithmetic run on every core instead of one task
@@ -168,20 +154,6 @@ def _q_matrix_profile_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("win_idx")
 
 
-def _sql_daily_cte() -> str:
-    return f"""
-WITH daily AS MATERIALIZED (
-  SELECT day,
-         CAST(floor(sum(yc) / 100.0 + 0.5) AS BIGINT) AS v
-  FROM (SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(round(o_totalprice * 100, 0) AS BIGINT) AS yc
-        FROM orders)
-  GROUP BY day
-), idxd AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY day) AS i, day, v FROM daily
-)"""
-
-
 _V_SUM = " + ".join(f"CAST(v{k} AS HUGEINT)" for k in range(MP_W))
 _Q_SUM = " + ".join(
     f"CAST(v{k} AS HUGEINT) * CAST(v{k} AS HUGEINT)" for k in range(MP_W)
@@ -193,9 +165,12 @@ _LEADS = ",\n         ".join(
     f"lead(v, {k}) OVER (ORDER BY i) AS v{k}" for k in range(1, MP_W)
 )
 
-_SQL_MATRIX_PROFILE_DAILY = (
-    _sql_daily_cte()
-    + f""", wins AS MATERIALIZED (
+_SQL_MATRIX_PROFILE_DAILY = f"""
+WITH idxd AS MATERIALIZED (
+  SELECT row_number() OVER (ORDER BY day) AS i, day,
+         CAST(floor(cents / 100.0 + 0.5) AS BIGINT) AS v
+  FROM ({SQL_DAILY_ORDER_CENTS})
+), wins AS MATERIALIZED (
   SELECT i, day, v AS v0,
          {_LEADS}
   FROM idxd
@@ -228,7 +203,6 @@ SELECT i AS win_idx, strftime(day, '%Y-%m-%d') AS win_day,
 FROM mp
 ORDER BY win_idx
 """
-)
 
 
 # --------------------------------------------------------------------------
@@ -237,24 +211,14 @@ ORDER BY win_idx
 
 
 def _q_sax_motif_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    # $1000 units so n·Q − S² stays far inside decimal(38,0) at any SF
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(
-            F.floor(F.sum("yc") / F.lit(1e5) + F.lit(0.5))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
+    # $1000 units so n·Q − S² stays far inside decimal(38,0) at any SF;
     # the indexed day frame feeds the global-moments aggregate AND the
     # per-day z-score — cache it so the fact scan runs once
     idxd = tracked_cache(
-        day.select(F.row_number().over(Window.orderBy("day")).alias("i"), "v")
+        daily_order_cents(spark, sf_dir).select(
+            F.row_number().over(Window.orderBy("day")).alias("i"),
+            F.floor(F.col("cents") / F.lit(1e5) + F.lit(0.5)).cast("bigint").alias("v"),
+        )
     )
     glob = idxd.agg(
         F.sum(F.col("v").cast("decimal(38,0)")).alias("gs"),
@@ -310,15 +274,10 @@ def _q_sax_motif_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_SAX_MOTIF_WORDS = f"""
-WITH daily AS MATERIALIZED (
-  SELECT day,
-         CAST(floor(sum(yc) / 1e5 + 0.5) AS BIGINT) AS v
-  FROM (SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(round(o_totalprice * 100, 0) AS BIGINT) AS yc
-        FROM orders)
-  GROUP BY day
-), idxd AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY day) AS i, v FROM daily
+WITH idxd AS MATERIALIZED (
+  SELECT row_number() OVER (ORDER BY day) AS i,
+         CAST(floor(cents / 1e5 + 0.5) AS BIGINT) AS v
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), gstats AS MATERIALIZED (
   SELECT sum(CAST(v AS HUGEINT)) AS gs,
          sum(CAST(v AS HUGEINT) * CAST(v AS HUGEINT)) AS gq,

@@ -42,8 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 #: two-point hypotheses drawn by the engine-free hash
 RANSAC_CANDIDATES = 16
@@ -54,22 +54,12 @@ RANSAC_TOL_DIV = 10
 
 
 def _q_ransac_line_daily_det(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(
-            F.floor(F.sum("yc") / F.lit(100.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("y")
-        )
-    )
     pts = tracked_cache(
-        day.select(
-            F.row_number().over(Window.orderBy("day")).alias("x"), "y"
+        daily_order_cents(spark, sf_dir).select(
+            F.row_number().over(Window.orderBy("day")).alias("x"),
+            F.floor(F.col("cents") / F.lit(100.0) + F.lit(0.5))
+            .cast("bigint")
+            .alias("y"),
         )
     )
     scalars = pts.agg(
@@ -163,14 +153,10 @@ def _q_ransac_line_daily_det(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SQL_RANSAC_LINE_DAILY_DET = f"""
-WITH daily AS MATERIALIZED (
-  SELECT day, CAST(floor(sum(yc) / 100.0 + 0.5) AS BIGINT) AS y
-  FROM (SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(round(o_totalprice * 100, 0) AS BIGINT) AS yc
-        FROM orders)
-  GROUP BY day
-), pts AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY day) AS x, y FROM daily
+WITH pts AS MATERIALIZED (
+  SELECT row_number() OVER (ORDER BY day) AS x,
+         CAST(floor(cents / 100.0 + 0.5) AS BIGINT) AS y
+  FROM ({SQL_DAILY_ORDER_CENTS})
 ), scalars AS (
   SELECT count(*) AS n,
          CAST((sum(CAST(y AS HUGEINT)) // count(*))

@@ -39,8 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 #: trailing windows of the two mean experts
 FTL_W_SHORT, FTL_W_LONG = 7, 28
@@ -49,15 +49,7 @@ FTL_W_SHORT, FTL_W_LONG = 7, 28
 def _q_ftl_expert_regret_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(F.sum("yc").alias("v"))
-    )
+    day = daily_order_cents(spark, sf_dir).withColumnRenamed("cents", "v")
     w = Window.orderBy("day")
     s7 = (
         F.sum("v").over(w.rowsBetween(-FTL_W_SHORT, -1)),
@@ -145,11 +137,7 @@ def _q_ftl_expert_regret_audit(
 
 _SQL_FTL_EXPERT_REGRET_AUDIT = f"""
 WITH daily AS MATERIALIZED (
-  SELECT day, sum(yc) AS v
-  FROM (SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(round(o_totalprice * 100, 0) AS BIGINT) AS yc
-        FROM orders)
-  GROUP BY day
+  SELECT day, cents AS v FROM ({SQL_DAILY_ORDER_CENTS})
 ), preds AS (
   SELECT day, v,
          lag(v, 1) OVER (ORDER BY day) AS p1,

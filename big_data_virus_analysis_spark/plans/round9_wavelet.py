@@ -35,8 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
 from .catalog import QuerySpec
+from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 #: dyadic window: 2**HAAR_LEVELS leading observed days
 HAAR_LEVELS = 10
@@ -46,23 +46,13 @@ HAAR_TOPK = 15
 
 
 def _q_haar_wavelet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(
-            F.floor(F.sum("yc") / F.lit(100.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("v")
-        )
-    )
     cur = (
-        day.select(
+        daily_order_cents(spark, sf_dir)
+        .select(
             (F.row_number().over(Window.orderBy("day")) - 1).alias("pos"),
-            F.col("v").alias("s"),
+            F.floor(F.col("cents") / F.lit(100.0) + F.lit(0.5))
+            .cast("bigint")
+            .alias("s"),
         )
         .where(F.col("pos") < HAAR_N)
         .localCheckpoint(eager=True)
@@ -113,15 +103,10 @@ def _q_haar_wavelet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_haar() -> str:
     parts = [
         f"""
-WITH daily AS MATERIALIZED (
-  SELECT day, CAST(floor(sum(yc) / 100.0 + 0.5) AS BIGINT) AS v
-  FROM (SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(round(o_totalprice * 100, 0) AS BIGINT) AS yc
-        FROM orders)
-  GROUP BY day
-), lvl0 AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY day) - 1 AS pos, v AS s
-  FROM daily QUALIFY pos < {HAAR_N}
+WITH lvl0 AS MATERIALIZED (
+  SELECT row_number() OVER (ORDER BY day) - 1 AS pos,
+         CAST(floor(cents / 100.0 + 0.5) AS BIGINT) AS s
+  FROM ({SQL_DAILY_ORDER_CENTS}) QUALIFY pos < {HAAR_N}
 )"""
     ]
     for lvl in range(1, HAAR_LEVELS + 1):

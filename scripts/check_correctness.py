@@ -12,7 +12,10 @@ decimal-vs-double, class mismatch) now fails the query here too, even
 when normalized values match; soft divergences (int width, decimal
 precision — driver-tolerated for 10 rounds) are recorded in the JSON.
 
-Exit code 1 if any oracle-checked query mismatches.
+Exit code 1 if any oracle-checked query mismatches.  The ``--json``
+record keeps, per entry, the Spark and oracle value hashes and the
+Spark output schema, so a refactor can be checked for identical
+answers and types by diffing two records.
 
 Usage: python scripts/check_correctness.py [name ...]
        python scripts/check_correctness.py --json OUT.json [name ...]
@@ -109,8 +112,18 @@ def main() -> None:
             results[name] = {"status": "spark_error", "err": str(e)[:300]}
             print(f"FAIL {name}: spark error: {e}")
             continue
+        sidx = [scols.index(c) for c in sorted(scols)]
+        # what a refactor must preserve: values and output types
+        spark_facts = {
+            "spark_hash": _hash(srows, sidx),
+            "spark_schema": sdf.schema.simpleString(),
+        }
         if name not in osql:
-            results[name] = {"status": "rows_only", "spark_rows": len(srows)}
+            results[name] = {
+                "status": "rows_only",
+                "spark_rows": len(srows),
+                **spark_facts,
+            }
             print(f"rows-only {name}: {len(srows)} rows")
             continue
         try:
@@ -126,6 +139,8 @@ def main() -> None:
             print(f"FAIL {name}: duckdb error: {e}")
             continue
         hard_types, soft_types = divergences(sdf.schema, otype_cols, otypes)
+        sh = spark_facts["spark_hash"]
+        oh = _hash(orows, [ocols.index(c) for c in sorted(ocols)])
         ok = True
         why = None
         if hard_types:
@@ -134,12 +149,8 @@ def main() -> None:
             why = f"schema: spark={sorted(scols)} oracle={sorted(ocols)}"
         elif len(srows) != len(orows):
             why = f"rows: spark={len(srows)} oracle={len(orows)}"
-        else:
-            sidx = [scols.index(c) for c in sorted(scols)]
-            oidx = [ocols.index(c) for c in sorted(ocols)]
-            sh, oh = _hash(srows, sidx), _hash(orows, oidx)
-            if sh != oh:
-                why = "value-hash mismatch"
+        elif sh != oh:
+            why = "value-hash mismatch"
         if why is not None:
             failures.append((name, why))
             ok = False
@@ -147,6 +158,8 @@ def main() -> None:
             "status": "pass" if ok else "fail",
             "spark_rows": len(srows),
             "oracle_rows": len(orows),
+            **spark_facts,
+            "oracle_hash": oh,
             **({"why": why} if why else {}),
             **({"soft_types": soft_types} if soft_types else {}),
         }

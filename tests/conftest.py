@@ -16,6 +16,24 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
+def pytest_terminal_summary(terminalreporter):
+    """Say which oracle set ``test_catalog_oracle.py`` replayed, so every
+    report names what the default run leaves out. Printed in the summary
+    because ``-q`` hides the report header."""
+    mod = sys.modules.get("test_catalog_oracle")
+    if mod is None:  # not collected in this run: nothing to report
+        return
+    full, run = len(mod.ORACLE_CASES), len(mod.DEFAULT_CASES)
+    if run == full:
+        line = f"catalog oracle replay: full: {full}"
+    else:
+        line = (
+            f"catalog oracle replay: headline: {run} of {full} "
+            "(SPARK_GRAFT_FULL_ORACLE=1 replays all)"
+        )
+    terminalreporter.write_line(line)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("bdva-tests", cpus=8)

@@ -1114,3 +1114,30 @@ def test_boyer_moore_single_scan_shape(plan_of):
     fold and certificate run in one per-user projection."""
     plan = plan_of("boyer_moore_majority_events")
     assert plan.count("events.parquet") <= 2  # stream + type dict
+
+
+def test_daily_order_cents_matches_sql_twin(spark):
+    """plans/frames.py: the shared day frame and its DuckDB twin return
+    the same rows with ``cents`` BIGINT in both engines — a twin that
+    drifts to HUGEINT or DECIMAL would otherwise hide behind a
+    consumer's final cast."""
+    import duckdb
+
+    from big_data_virus_analysis_spark.plans.frames import (
+        SQL_DAILY_ORDER_CENTS,
+        daily_order_cents,
+    )
+
+    df = daily_order_cents(spark, SMOKE_SF_DIR)
+    assert df.dtypes == [("day", "date"), ("cents", "bigint")]
+    got = sorted(tuple(r) for r in df.collect())
+    with duckdb.connect() as con:
+        con.execute(
+            f"CREATE VIEW orders AS SELECT * FROM '{SMOKE_SF_DIR}/orders.parquet'"
+        )
+        rel = con.sql(SQL_DAILY_ORDER_CENTS)
+        assert rel.columns == ["day", "cents"]
+        assert [str(t) for t in rel.types] == ["DATE", "BIGINT"]
+        want = sorted(rel.fetchall())
+    assert len(got) > 0
+    assert got == want
