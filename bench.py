@@ -660,7 +660,8 @@ def _compact_line(
        protected (flagged / over-2x-baseline) name.
     7. Absolute last resort: protected queries drop too — an
        unparseable head-cut line carries no evidence at all, so the
-       parse guarantee outranks completeness.
+       parse guarantee outranks completeness.  Their number is kept in
+       ``n_protected_omitted``, so the line says what it lost.
 
     GUARANTEED to terminate (r8 ADVICE): the loop exits the moment a
     full trim pass fails to shrink the line — a line whose irreducible
@@ -681,6 +682,10 @@ def _compact_line(
             k: v for k, v in compact["queries"].items() if k not in drop
         }
         compact["n_queries_omitted"] = len(timings) - len(compact["queries"])
+        if protected_ok:
+            compact["n_protected_omitted"] = len(
+                (protected & timings.keys()) - compact["queries"].keys()
+            )
         return True
 
     def _cap_names(fld: str) -> bool:

@@ -183,11 +183,14 @@ FROM g
 
 
 def _residual_day_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day frame with OLS residuals of daily revenue (cents) on day
-    index, quantized to exact integer cents (``ec``): the fit comes
+    """Day frame ``(i, yc, a, b, ec)``: day index, daily revenue in
+    cents, the OLS intercept and slope of ``yc`` on ``i``, and the
+    residual quantized to exact integer cents (``ec``).  The fit comes
     from exact integer moments cast to double only inside the fixed
     closed form, so every engine computes the identical a/b and the
-    identical per-row residual before quantization."""
+    identical per-row residual before quantization.  The one OLS day
+    fit behind Durbin-Watson, Breusch-Pagan, Cook's distance and the
+    Huber IRLS step (round7_ts)."""
     day = daily_order_cents(spark, sf_dir).select(
         F.datediff("day", F.lit("1995-01-01").cast("date")).cast("bigint").alias("i"),
         F.col("cents").alias("yc"),
@@ -213,6 +216,9 @@ def _residual_day_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit = mom.select(b.alias("b"), a.alias("a"))
     return day.crossJoin(F.broadcast(fit)).select(
         "i",
+        "yc",
+        "a",
+        "b",
         F.floor(
             F.col("yc").cast("double")
             - (F.col("a") + F.col("b") * F.col("i").cast("double"))
@@ -244,7 +250,7 @@ WITH day AS (
             / CAST(n AS DOUBLE) AS a
   FROM fit
 ), resid AS (
-  SELECT day.i,
+  SELECT day.i, day.yc, fit2.a, fit2.b,
          CAST(floor(CAST(day.yc AS DOUBLE)
                     - (fit2.a + fit2.b * CAST(day.i AS DOUBLE)) + 0.5)
               AS BIGINT) AS ec

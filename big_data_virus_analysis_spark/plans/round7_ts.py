@@ -44,6 +44,7 @@ from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
 from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
+from .round7_stats import _residual_day_frame, _SQL_RESIDUAL_DAY_FRAME
 
 _HURST_SIZES = (16, 64, 256)
 
@@ -284,42 +285,7 @@ _MAD_CONST = 1.4826
 
 
 def _q_huber_irls_step_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    day = daily_order_cents(spark, sf_dir).select(
-        F.datediff("day", F.lit("1995-01-01").cast("date")).cast("bigint").alias("i"),
-        F.col("cents").alias("yc"),
-    )
-    mom = day.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("i").alias("sx"),
-        F.sum(F.col("i") * F.col("i")).alias("sxx"),
-        F.sum("yc").alias("sy"),
-        F.sum(
-            F.col("i").cast("decimal(19,0)") * F.col("yc").cast("decimal(19,0)")
-        ).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
-    b0 = (
-        nd * F.col("sxy").cast("double")
-        - F.col("sx").cast("double") * F.col("sy").cast("double")
-    ) / (
-        nd * F.col("sxx").cast("double")
-        - F.col("sx").cast("double") * F.col("sx").cast("double")
-    )
-    a0 = (F.col("sy").cast("double") - b0 * F.col("sx").cast("double")) / nd
-    fit0 = mom.select(b0.alias("b0"), a0.alias("a0"))
-    resid = day.crossJoin(F.broadcast(fit0)).select(
-        "i",
-        "yc",
-        "a0",
-        "b0",
-        F.floor(
-            F.col("yc").cast("double")
-            - (F.col("a0") + F.col("b0") * F.col("i").cast("double"))
-            + 0.5
-        )
-        .cast("bigint")
-        .alias("ec"),
-    )
+    resid = _residual_day_frame(spark, sf_dir)
     scale = resid.agg(
         (
             F.lit(_MAD_CONST) * F.percentile(F.abs(F.col("ec")), F.lit(0.5))
@@ -328,8 +294,8 @@ def _q_huber_irls_step_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted = resid.crossJoin(F.broadcast(scale)).select(
         "i",
         "yc",
-        "a0",
-        "b0",
+        "a",
+        "b",
         F.floor(
             F.when(
                 F.abs(F.col("ec")).cast("double") <= _HUBER_K * F.col("sigma"),
@@ -345,8 +311,8 @@ def _q_huber_irls_step_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wmom = weighted.agg(
         F.count(F.lit(1)).alias("n_days"),
-        F.first("a0").alias("a0"),
-        F.first("b0").alias("b0"),
+        F.first("a").alias("a0"),
+        F.first("b").alias("b0"),
         F.sum("w6").alias("sw"),
         F.sum(F.col("w6") * F.col("i")).alias("swx"),
         F.sum(F.col("w6") * F.col("i") * F.col("i")).alias("swxx"),
@@ -378,36 +344,13 @@ def _q_huber_irls_step_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_HUBER_IRLS_STEP_EXACT = f"""
-WITH day AS (
-  SELECT CAST(date_diff('day', DATE '1995-01-01', day) AS BIGINT) AS i,
-         cents AS yc
-  FROM ({SQL_DAILY_ORDER_CENTS})
-), mom AS (
-  SELECT count(*) AS n, sum(i) AS sx, sum(i * i) AS sxx, sum(yc) AS sy,
-         sum(CAST(i AS HUGEINT) * yc) AS sxy
-  FROM day
-), fit0 AS (
-  SELECT (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-          - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-         / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-            - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS b0,
-         n, sx, sy
-  FROM mom
-), fit AS (
-  SELECT b0, (CAST(sy AS DOUBLE) - b0 * CAST(sx AS DOUBLE))
-             / CAST(n AS DOUBLE) AS a0
-  FROM fit0
-), resid AS (
-  SELECT d.i, d.yc, f.a0, f.b0,
-         CAST(floor(CAST(d.yc AS DOUBLE)
-                    - (f.a0 + f.b0 * CAST(d.i AS DOUBLE)) + 0.5)
-              AS BIGINT) AS ec
-  FROM day d CROSS JOIN fit f
-), scale AS (
+_SQL_HUBER_IRLS_STEP_EXACT = (
+    _SQL_RESIDUAL_DAY_FRAME
+    + f"""
+, scale AS (
   SELECT {_MAD_CONST} * quantile_cont(abs(ec), 0.5) AS sigma FROM resid
 ), weighted AS (
-  SELECT r.i, r.yc, r.a0, r.b0,
+  SELECT r.i, r.yc, r.a, r.b,
          CAST(floor(CASE WHEN CAST(abs(r.ec) AS DOUBLE)
                               <= {_HUBER_K} * s.sigma
                          THEN 1.0
@@ -417,7 +360,7 @@ WITH day AS (
   FROM resid r CROSS JOIN scale s
 ), wmom AS (
   SELECT count(*) AS n_days,
-         any_value(a0) AS a0, any_value(b0) AS b0,
+         any_value(a) AS a0, any_value(b) AS b0,
          sum(w6) AS sw, sum(w6 * i) AS swx, sum(w6 * i * i) AS swxx,
          sum(CAST(w6 AS HUGEINT) * yc) AS swy,
          sum(CAST(w6 * i AS HUGEINT) * yc) AS swxy,
@@ -441,6 +384,7 @@ SELECT CAST(n_days AS BIGINT) AS n_days,
        round(b1 / 100.0, 6) AS huber_slope
 FROM fin
 """
+)
 
 
 SPECS: dict[str, QuerySpec] = {

@@ -6,6 +6,12 @@ point is set once, centrally:
 
 * AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   broadcast demotion/promotion) — replaces hand-scheduling.
+* AQE may also coalesce *cached* shuffle outputs
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``, off by
+  default).  Off, a cached frame whose top operator is a shuffle keeps
+  every ``spark.sql.shuffle.partitions`` partition however small it is:
+  the api-log job's 1,604 cached document vectors sat in 32 partitions,
+  so each k-means iteration ran 64 tasks (32 map, 32 reduce).
 * ``spark.sql.shuffle.partitions`` sized from the local core count; on a
   real cluster AQE coalesces the (deliberately high) initial number.
 * Arrow enabled so the few pandas-UDF paths (vector assembly, multimodal
@@ -43,6 +49,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # loud overflow and divide-by-zero must not rest on a version default
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(max(n, 32)))

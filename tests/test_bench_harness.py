@@ -129,6 +129,18 @@ def test_compact_line_protected_queries_never_drop():
     parsed = json.loads(line)
     assert parsed["n_queries_omitted"] > 0  # trimming actually happened
     assert protected <= set(parsed["queries"])
+    assert "n_protected_omitted" not in parsed  # the last resort never ran
+
+
+def test_compact_line_counts_protected_queries_it_drops():
+    """On a line too long to fit in any trimmed form, the last-resort
+    trim drops protected names too, and the line says how many."""
+    compact, timings = _mk_compact(3, 20, 20)
+    line = bench._compact_line(compact, timings, protected=set(timings), cap=50)
+    parsed = json.loads(line)
+    assert len(line) > 50  # irreducible: shipped over the cap
+    assert parsed["queries"] == {}
+    assert parsed["n_protected_omitted"] == 3 == parsed["n_queries_omitted"]
 
 
 def test_compact_line_collapses_cleared_flags_before_survivors():
