@@ -18,11 +18,14 @@ SVMDT.scala) on the DataFrame ML API:
 
 Everything consumes a plain DataFrame with ``features_arr:
 array<double>`` and converts via ``array_to_vector`` — JVM-side, no
-Python UDF in the vector path.  Grid search is a driver loop over cached
-splits (same shape as the reference; the per-fit work is distributed).
+Python UDF in the vector path.  Grid search is a driver loop of fits over
+cached splits (same shape as the reference; the per-fit work is
+distributed); the whole grid is then scored in one grouped AUC pass.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.ml.classification import (
     DecisionTreeClassifier,
@@ -34,7 +37,7 @@ from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .metrics import exact_auc
+from .metrics import exact_auc_frame, score_frame
 
 DEFAULT_SEED = 42
 
@@ -63,20 +66,38 @@ def kmeans_assign(
 
 def _grid_auc(train: DataFrame, cv: DataFrame, grid) -> list[tuple[str, float, float]]:
     """Fit each ``(model, param, estimator)`` of ``grid`` on ``train``,
-    score ``cv`` → [(model, param, auc)].
+    score ``cv`` → [(model, param, auc)] in grid order.
 
     AUC of the positive-class score (rawPrediction[1]) via the exact
     Mann–Whitney aggregation that the oracle-checked
     ``fixed_scorer_auc``/``auc_rank_based`` catalog queries pin against
-    DuckDB (ml/metrics.py::exact_auc) — the evaluator's 1000-bin ROC
-    approximation is replaced by the exact area.  Equality with
-    ``BinaryClassificationEvaluator`` (up to its binning) is asserted in
-    tests/test_ml_queries.py.
+    DuckDB (ml/metrics.py) — the evaluator's 1000-bin ROC approximation
+    is replaced by the exact area.  Every model's scored ``cv`` rows are
+    tagged with its grid index and unioned, and one grouped
+    ``exact_auc_frame(..., by=["g"])`` pass returns all AUCs: one
+    aggregate and one prefix sum for the grid, not one plan per model.
+    Each AUC equals ``exact_auc`` of that model's predictions.  Raises
+    ``ValueError`` naming the model when its ``cv`` predictions hold one
+    class only.  Equality with ``BinaryClassificationEvaluator`` (up to
+    its binning) is asserted in tests/test_ml_queries.py.
     """
-    return [
-        (model, float(param), exact_auc(est.fit(train).transform(cv), "rawPrediction"))
-        for model, param, est in grid
-    ]
+    grid = list(grid)
+    scored = reduce(DataFrame.unionAll, (
+        score_frame(est.fit(train).transform(cv), "rawPrediction").withColumn("g", F.lit(i))
+        for i, (_, _, est) in enumerate(grid)
+    ))
+    rows = {r["g"]: r for r in exact_auc_frame(scored, by=["g"]).collect()}
+    out = []
+    for i, (model, param, _) in enumerate(grid):
+        row = rows.get(i, {"n_pos": 0, "n_neg": 0, "auc": None})  # empty cv: no row
+        if row["auc"] is None:
+            raise ValueError(
+                f"AUC undefined for {model} (param={param}): its cv predictions have "
+                f"n_pos={row['n_pos']}, n_neg={row['n_neg']} — both classes must be "
+                "present to rank positives against negatives"
+            )
+        out.append((model, float(param), float(row["auc"])))
+    return out
 
 
 def dt_auc_grid(

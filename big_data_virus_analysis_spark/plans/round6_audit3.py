@@ -7,8 +7,9 @@ pins both the estimate and the error.
   LCG-hyperplane scorer (shared with ``fixed_scorer_auc``) on NESTED
   deterministic subsets (25/50/75/100% via an arithmetic key hash):
   the metric-vs-data-size curve that decides whether more data is
-  worth the tokens.  Each point is the exact Mann–Whitney AUC via the
-  two-phase prefix sum; the scored frame materializes once.
+  worth the tokens.  Each scored row is exploded into every subset it
+  belongs to, and one grouped exact-AUC pass (``by=["pct"]``: one
+  aggregate, one two-phase prefix sum) gives every point.
 * ``bloom_fpr_curve`` — Bloom-filter false-positive rate, measured vs
   theoretical, for two filter sizes: build keys are odd-mapped
   supplier ids, probe keys even-mapped customer ids (provably
@@ -21,8 +22,9 @@ pins both the estimate and the error.
   the exact share.  Complements ``dp_noise_calibration`` (which
   plans noise; this measures a mechanism end-to-end).
 
-100 TB shape: the learning-curve filter pushes to the scan (arithmetic
-predicate on the key); Bloom bit tables are bounded by m (rows ≤ m per
+100 TB shape: the learning curve scans once and explodes each row into
+at most four subsets (2.5 on average) before the grouped score
+aggregate; Bloom bit tables are bounded by m (rows ≤ m per
 filter), probes join against them by bit id; randomized response is a
 single hash aggregate.
 """
@@ -33,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml.metrics import exact_auc_frame
-from ..operators.caching import tracked_cache
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
 from .catalog import QuerySpec
@@ -57,21 +58,15 @@ def _q_fixed_scorer_learning_curve(spark: SparkSession, sf_dir: str) -> DataFram
         ),
         6,
     )
-    scored = tracked_cache(
-        emb.select(
-            score.alias("score"),
-            (F.col("label") < 5).cast("int").alias("pos"),
-            ((F.col("vec_id") * _LC_MULT) % 100).alias("h"),
-        )
+    h = (F.col("vec_id") * _LC_MULT) % 100
+    # each row joins every nested subset it belongs to (h < pct)
+    pcts = F.filter(F.array(*[F.lit(p) for p in _LC_PCTS]), lambda p: h < p)
+    scored = emb.select(
+        score.alias("score"),
+        (F.col("label") < 5).cast("int").alias("pos"),
+        F.explode(pcts).alias("pct"),
     )
-    out = None
-    for pct in _LC_PCTS:
-        subset = scored.where(F.col("h") < pct)
-        row = exact_auc_frame(subset).select(
-            F.lit(pct).alias("pct"), "n_pos", "n_neg", "auc"
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
+    return exact_auc_frame(scored, by=["pct"])
 
 
 _LC_W_VALUES = ", ".join(f"({d + 1}, {_plane_weight(0, d)!r})" for d in range(DIM))

@@ -26,7 +26,7 @@ self-join at lag 1, one 9-moment aggregate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_row_number
@@ -34,7 +34,14 @@ from ..sources.tables import load_table
 from .catalog import QuerySpec
 
 
-def _q_granger_causality_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _granger_moment_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row: ``n`` and the nine moment sums of the lag-1 design
+    ``(y_t; y_{t−1}, x_{t−1})`` over the day frame ``(day, y = revenue
+    cents, x = order count)`` — the global row number ranks the days and
+    a rank self-join at lag 1 pairs each with its predecessor.  Products
+    run in DECIMAL so the second moments are exact.  Shared with
+    round8_infer's ``aic_bic_granger_compare``; DuckDB twin:
+    :data:`_SQL_GRANGER_MOMENTS`."""
     orders = load_table(spark, sf_dir, "orders")
     day = (
         orders.select(
@@ -53,7 +60,7 @@ def _q_granger_causality_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = cur.join(prv, "rk")
     dec = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
-    mom = rows.agg(
+    return rows.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("yt").alias("sy"),
         F.sum("yl").alias("sa"),
@@ -65,6 +72,13 @@ def _q_granger_causality_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(dec("xl") * dec("yt")).alias("sby"),
         F.sum(dec("yt") * dec("yt")).alias("syy"),
     )
+
+
+def _granger_fit() -> tuple[Column, Column, Column, Column, Column]:
+    """``(n, β, γ, SSR_r, SSR_u)`` as DOUBLE expressions over
+    :func:`_granger_moment_frame`: centered moments, the restricted fit
+    ``SSR_r = cyy − cay²/caa`` and the unrestricted fit by Cramer's rule
+    on ``[[caa, cab], [cab, cbb]]`` (the ``c`` … fit CTEs of the twin)."""
     nd = F.col("n").cast("double")
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     # centered moments
@@ -74,25 +88,19 @@ def _q_granger_causality_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     cay = d("say") - d("sa") * d("sy") / nd
     cby = d("sby") - d("sb") * d("sy") / nd
     cyy = d("syy") - d("sy") * d("sy") / nd
-    # restricted: beta_r = cay/caa; SSR_r = cyy - cay^2/caa
     ssr_r = cyy - cay * cay / caa
-    # unrestricted via Cramer on [[caa, cab], [cab, cbb]]
     det = caa * cbb - cab * cab
     beta = (cay * cbb - cby * cab) / det
     gamma = (caa * cby - cab * cay) / det
     ssr_u = cyy - beta * cay - gamma * cby
-    f_stat = (ssr_r - ssr_u) / (ssr_u / (nd - 3.0))
-    return mom.select(
-        F.col("n").alias("n_obs"),
-        F.round(beta, 6).alias("beta_lag_revenue"),
-        F.round(gamma / 100.0, 6).alias("gamma_lag_orders_dollars"),
-        F.round(f_stat, 6).alias("granger_f"),
-        (f_stat > 3.84).alias("x_granger_causes_y_5pct"),
-    )
+    return nd, beta, gamma, ssr_r, ssr_u
 
 
-_SQL_GRANGER_CAUSALITY_DAILY = """
-WITH day AS (
+#: DuckDB twin of :func:`_granger_moment_frame` plus the centered
+#: moments: the CTEs ``day`` … ``mom``, ``c`` (one row: n, caa, cbb,
+#: cab, cay, cby, cyy), embedded after ``WITH`` by both consumers.
+_SQL_GRANGER_MOMENTS = """
+day AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
          sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y,
          count(*) AS x
@@ -120,7 +128,23 @@ WITH day AS (
          CAST(sby AS DOUBLE) - CAST(sb AS DOUBLE) * sy / n AS cby,
          CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n AS cyy
   FROM mom
-), g AS (
+)"""
+
+
+def _q_granger_causality_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    nd, beta, gamma, ssr_r, ssr_u = _granger_fit()
+    f_stat = (ssr_r - ssr_u) / (ssr_u / (nd - 3.0))
+    return _granger_moment_frame(spark, sf_dir).select(
+        F.col("n").alias("n_obs"),
+        F.round(beta, 6).alias("beta_lag_revenue"),
+        F.round(gamma / 100.0, 6).alias("gamma_lag_orders_dollars"),
+        F.round(f_stat, 6).alias("granger_f"),
+        (f_stat > 3.84).alias("x_granger_causes_y_5pct"),
+    )
+
+
+_SQL_GRANGER_CAUSALITY_DAILY = f"""
+WITH {_SQL_GRANGER_MOMENTS}, g AS (
   SELECT n, caa, cbb, cab, cay, cby, cyy,
          cyy - cay * cay / caa AS ssr_r,
          (cay * cbb - cby * cab) / (caa * cbb - cab * cab) AS beta,

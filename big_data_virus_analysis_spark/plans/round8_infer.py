@@ -41,6 +41,7 @@ from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
 from .catalog import QuerySpec
 from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
+from .round7_granger import _SQL_GRANGER_MOMENTS, _granger_fit, _granger_moment_frame
 from .round7_stats import _residual_day_frame, _SQL_RESIDUAL_DAY_FRAME
 
 # --------------------------------------------------------------------------
@@ -131,53 +132,13 @@ LIMIT {_COOKS_TOPK}
 
 
 def _q_aic_bic_granger_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    day = (
-        orders.select(
-            F.to_date("o_orderdate").alias("day"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        )
-        .groupBy("day")
-        .agg(F.sum("yc").alias("y"), F.count(F.lit(1)).alias("x"))
-    )
-    ranked = global_row_number(day, [F.asc("day")], out_col="rk")
-    cur = ranked.select("rk", F.col("y").alias("yt"))
-    prv = ranked.select(
-        (F.col("rk") + 1).alias("rk"), F.col("y").alias("yl"), F.col("x").alias("xl")
-    )
-    rows = cur.join(prv, "rk")
-    dec = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
-    mom = rows.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("yt").alias("sy"),
-        F.sum("yl").alias("sa"),
-        F.sum("xl").alias("sb"),
-        F.sum(dec("yl") * dec("yl")).alias("saa"),
-        F.sum(dec("xl") * dec("xl")).alias("sbb"),
-        F.sum(dec("yl") * dec("xl")).alias("sab"),
-        F.sum(dec("yl") * dec("yt")).alias("say"),
-        F.sum(dec("xl") * dec("yt")).alias("sby"),
-        F.sum(dec("yt") * dec("yt")).alias("syy"),
-    )
-    nd = F.col("n").cast("double")
-    d = lambda c: F.col(c).cast("double")  # noqa: E731
-    caa = d("saa") - d("sa") * d("sa") / nd
-    cbb = d("sbb") - d("sb") * d("sb") / nd
-    cab = d("sab") - d("sa") * d("sb") / nd
-    cay = d("say") - d("sa") * d("sy") / nd
-    cby = d("sby") - d("sb") * d("sy") / nd
-    cyy = d("syy") - d("sy") * d("sy") / nd
-    ssr_r = cyy - cay * cay / caa
-    det = caa * cbb - cab * cab
-    beta = (cay * cbb - cby * cab) / det
-    gamma = (caa * cby - cab * cay) / det
-    ssr_u = cyy - beta * cay - gamma * cby
+    nd, _, _, ssr_r, ssr_u = _granger_fit()
     # SSRs are in cents^2; IC differences are scale-invariant (the
     # n*ln(scale) terms cancel between models)
     ic = lambda ssr, k, pen: nd * F.log(ssr / nd) + pen * k  # noqa: E731
     aic_r, aic_u = ic(ssr_r, 2, F.lit(2.0)), ic(ssr_u, 3, F.lit(2.0))
     bic_r, bic_u = ic(ssr_r, 2, F.log(nd)), ic(ssr_u, 3, F.log(nd))
-    return mom.select(
+    return _granger_moment_frame(spark, sf_dir).select(
         F.col("n").alias("n_obs"),
         F.round(aic_r, 6).alias("aic_restricted"),
         F.round(aic_u, 6).alias("aic_unrestricted"),
@@ -188,36 +149,8 @@ def _q_aic_bic_granger_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_AIC_BIC_GRANGER_COMPARE = """
-WITH day AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y,
-         count(*) AS x
-  FROM orders GROUP BY 1
-), ranked AS (
-  SELECT y, x, row_number() OVER (ORDER BY day) AS rk FROM day
-), rows_ AS (
-  SELECT a.y AS yt, b.y AS yl, b.x AS xl
-  FROM ranked a JOIN ranked b ON a.rk = b.rk + 1
-), mom AS (
-  SELECT count(*) AS n, sum(yt) AS sy, sum(yl) AS sa, sum(xl) AS sb,
-         sum(CAST(yl AS HUGEINT) * yl) AS saa,
-         sum(CAST(xl AS HUGEINT) * xl) AS sbb,
-         sum(CAST(yl AS HUGEINT) * xl) AS sab,
-         sum(CAST(yl AS HUGEINT) * yt) AS say,
-         sum(CAST(xl AS HUGEINT) * yt) AS sby,
-         sum(CAST(yt AS HUGEINT) * yt) AS syy
-  FROM rows_
-), c AS (
-  SELECT n,
-         CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * sa / n AS caa,
-         CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * sb / n AS cbb,
-         CAST(sab AS DOUBLE) - CAST(sa AS DOUBLE) * sb / n AS cab,
-         CAST(say AS DOUBLE) - CAST(sa AS DOUBLE) * sy / n AS cay,
-         CAST(sby AS DOUBLE) - CAST(sb AS DOUBLE) * sy / n AS cby,
-         CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * sy / n AS cyy
-  FROM mom
-), g AS (
+_SQL_AIC_BIC_GRANGER_COMPARE = f"""
+WITH {_SQL_GRANGER_MOMENTS}, g AS (
   SELECT n, cyy - cay * cay / caa AS ssr_r,
          cyy - ((cay * cbb - cby * cab) / (caa * cbb - cab * cab)) * cay
              - ((caa * cby - cab * cay) / (caa * cbb - cab * cab)) * cby

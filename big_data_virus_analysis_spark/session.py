@@ -14,6 +14,12 @@ point is set once, centrally:
   so each k-means iteration ran 64 tasks (32 map, 32 reduce).
 * ``spark.sql.shuffle.partitions`` sized from the local core count; on a
   real cluster AQE coalesces the (deliberately high) initial number.
+* ``spark.default.parallelism`` left unset.  Set, it forces that many
+  reduce partitions on every RDD reduce inside Spark ML (the decision
+  tree's per-level split aggregation, the k-means center update),
+  whatever the input's partition count: 32 reduce tasks for a
+  one-partition input.  Unset, those reduces follow the upstream
+  partition count and ``sc.defaultParallelism`` is the core count.
 * Arrow enabled so the few pandas-UDF paths (vector assembly, multimodal
   decode) transfer columnar batches, never pickled rows.
 * Broadcast threshold left at default (10 MB) — dimension tables
@@ -53,7 +59,6 @@ def get_spark(
         # loud overflow and divide-by-zero must not rest on a version default
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(max(n, 32)))
-        .config("spark.default.parallelism", str(max(n, 32)))
         # --- python interop: Arrow batches, never pickled rows ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -4,6 +4,9 @@ catalog run never accumulates InMemoryRelations across queries."""
 
 from __future__ import annotations
 
+import re
+from operator import add
+
 import pytest
 
 from big_data_virus_analysis_spark.operators.caching import (
@@ -92,6 +95,21 @@ def test_cached_shuffle_output_is_coalesced(spark):
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert vec.rdd.getNumPartitions() < n_shuffle
     release_tracked_caches()
+
+
+def test_rdd_reduce_follows_input_partitions(spark):
+    """session.py leaves ``spark.default.parallelism`` unset: the default
+    parallelism is the session's core count, and an RDD reduce (the
+    shape of Spark ML's tree split aggregation and k-means center
+    update) keeps its input's partition count instead of fanning a
+    one-partition input out to 32 reduce tasks."""
+    sc = spark.sparkContext
+    cpus = int(re.fullmatch(r"local\[(\d+)\]", sc.master).group(1))
+    assert sc.defaultParallelism == cpus
+    pairs = sc.parallelize(range(100), 1).map(lambda x: (x % 7, 1))
+    reduced = pairs.reduceByKey(add)
+    assert reduced.getNumPartitions() == 1
+    assert sorted(reduced.collect()) == [(k, 15 if k < 2 else 14) for k in range(7)]
 
 
 def test_kmeans_clustering_repeats_across_materializations(spark):

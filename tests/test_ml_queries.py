@@ -33,6 +33,35 @@ def test_dt_auc_grid(spark):
     assert {r.model for r in rows} == {"dt_entropy", "dt_gini"}
 
 
+def test_grid_auc_is_exact_auc_of_each_model(spark):
+    """The grid's one grouped AUC pass returns, in grid order, exactly
+    the AUC that exact_auc gives each model's own predictions; a cv
+    split holding one class raises a ValueError naming the model."""
+    import pytest
+    from pyspark.ml.classification import DecisionTreeClassifier
+    from pyspark.sql import functions as F
+
+    from big_data_virus_analysis_spark.ml.metrics import exact_auc
+    from big_data_virus_analysis_spark.ml.pipeline import DEFAULT_SEED, dt_auc_grid
+    from big_data_virus_analysis_spark.plans.catalog import _embedding_splits
+
+    train, cv, _ = _embedding_splits(spark, SMOKE_SF_DIR)
+    got = dt_auc_grid(train, cv, depths=(1, 2))
+    want = [
+        (f"dt_{imp}", float(depth), exact_auc(
+            DecisionTreeClassifier(
+                impurity=imp, maxDepth=depth, labelCol="label", seed=DEFAULT_SEED
+            ).fit(train).transform(cv),
+            "rawPrediction",
+        ))
+        for imp in ("entropy", "gini")
+        for depth in (1, 2)
+    ]
+    assert got == want
+    with pytest.raises(ValueError, match="dt_gini"):
+        dt_auc_grid(train, cv.where(F.col("label") == 1.0), depths=(1,), impurities=("gini",))
+
+
 def test_svm_auc_grid(spark):
     rows = CATALOG["svm_auc_grid"].spark(spark, SF_DIR).collect()
     assert len(rows) == 5

@@ -635,6 +635,13 @@ def test_skip_slow_grids_single_fit_linted(spark):
         F.col("label").cast("int").alias("pos"),
     )
     _lint_plan("exact_auc_frame", fmt_plan(exact_auc_frame(fixed)))
+    # the grouped form the grids score through: two fixed scorers tagged
+    # and unioned as _grid_auc tags its models, one aggregate and one
+    # prefix sum over (g, score)
+    grouped = fixed.withColumn("g", F.lit(0)).unionByName(
+        fixed.select((-F.col("score")).alias("score"), "pos", F.lit(1).alias("g"))
+    )
+    _lint_plan("exact_auc_frame_by", fmt_plan(exact_auc_frame(grouped, by=["g"])))
     # kmeans_k_sweep: one k=5 fit over the IG-pipeline document vectors
     # (whose 1-row totals broadcast is the allowlisted BNLJ), scored by
     # the same weighted-entropy aggregate each sweep step runs

@@ -111,6 +111,61 @@ def test_exact_auc_matches_bruteforce(spark, rows):
     assert got == pytest.approx(want, abs=1e-6)
 
 
+def _counts_and_auc(pairs):
+    """``(n_pos, n_neg, auc)`` of ``(score, pos)`` pairs: the brute-force
+    Mann-Whitney AUC (ties count one half), None for a one-class set."""
+    pos = [s for s, p in pairs if p]
+    neg = [s for s, p in pairs if not p]
+    if not pos or not neg:
+        return len(pos), len(neg), None
+    num = sum((p > n) + 0.5 * (p == n) for p in pos for n in neg)
+    return len(pos), len(neg), num / (len(pos) * len(neg))
+
+
+def _assert_auc_row(row, want):
+    assert (row["n_pos"], row["n_neg"]) == want[:2]
+    if want[2] is None:
+        assert row["auc"] is None
+    else:
+        assert row["auc"] == pytest.approx(want[2], abs=1e-6)
+
+
+@given(
+    groups=st.lists(
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=5),  # scores shared across groups
+                st.booleans(),
+            ),
+            min_size=2,
+            max_size=40,
+        ),
+        min_size=1,
+        max_size=4,
+    ),
+    lone_class=st.booleans(),
+)
+@_prop
+def test_grouped_exact_auc_matches_bruteforce(spark, groups, lone_class):
+    """exact_auc_frame(by=["g"]) == brute-force Mann-Whitney in every
+    group: groups of unequal sizes over shared score values, plus one
+    single-class group whose auc is NULL while the others stay right;
+    by=() is the one-row frame over all rows."""
+    from big_data_virus_analysis_spark.ml.metrics import exact_auc_frame
+
+    groups = [*groups, [(s, lone_class) for s in range(3)]]
+    rows = [(g, float(s), int(p)) for g, grp in enumerate(groups) for s, p in grp]
+    df = spark.createDataFrame(rows, "g int, score double, pos int")
+    got = {r["g"]: r for r in exact_auc_frame(df, by=["g"]).collect()}
+    assert sorted(got) == list(range(len(groups)))
+    for g, grp in enumerate(groups):
+        _assert_auc_row(got[g], _counts_and_auc(grp))
+    assert got[len(groups) - 1]["auc"] is None
+    whole = exact_auc_frame(df.drop("g")).collect()
+    assert len(whole) == 1 and whole[0].__fields__ == ["n_pos", "n_neg", "auc"]
+    _assert_auc_row(whole[0], _counts_and_auc([(s, p) for _, s, p in rows]))
+
+
 @given(
     edges=st.lists(
         st.tuples(
