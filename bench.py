@@ -236,7 +236,8 @@ HEADLINE = [
     "jaccard_vs_edit_tau",
 ]
 
-#: queries over a FIXED corpus (/root/reference/api_logs) — sf_dir is
+#: queries over a FIXED corpus (the real api_logs where present, else
+#: the generated one, plans/catalog.py::API_LOG_ROOT) — sf_dir is
 #: ignored, so per-SF scaling legs would measure the same work thrice;
 #: they get a headline median + spread but no exponent.
 FIXED_CORPUS = {"api_log_feature_job_e2e"}

@@ -23,6 +23,7 @@ order-insensitive value-hash comparison deterministic:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -1332,11 +1333,13 @@ CATALOG.update(
 )
 
 # --------------------------------------------------------------------------
-# Reference-corpus pack: the original pipeline over the real checked-in
-# api_logs (tests/test_reference_parity.py holds the golden assertions;
-# rows-only here — DuckDB views cover only the synthetic tables)
+# Reference-corpus pack: the original pipeline over the reference's own
+# api_logs where present, else over the generated corpus of the same shape
+# (tests/test_reference_parity.py holds the real-corpus golden assertions;
+# the DuckDB oracles read the same text files)
 # --------------------------------------------------------------------------
 
+from ..sources.api_log_corpus import CLASS_DIRS, generated_corpus_root  # noqa: E402
 from ..sources.api_logs import (  # noqa: E402
     api_log_byte_tokens,
     api_log_doc_classes,
@@ -1349,13 +1352,26 @@ from ..sources.api_logs import (  # noqa: E402
 _REF_CLEAN = "/root/reference/api_logs/clean_LOGS_CONVERTED"
 _REF_VIRUS = "/root/reference/api_logs/virus_LOGS_CONVERTED"
 
+#: the one corpus root the api-log entries' plans and oracles read,
+#: resolved at import: the reference's own corpus where both class
+#: directories exist, else the generated one (written once under the
+#: temp dir; sources/api_log_corpus.py)
+API_LOG_ROOT = (
+    os.path.dirname(_REF_CLEAN)
+    if os.path.isdir(_REF_CLEAN) and os.path.isdir(_REF_VIRUS)
+    else generated_corpus_root()
+)
+_API_LOG_CLEAN = os.path.join(API_LOG_ROOT, CLASS_DIRS["clean"])
+_API_LOG_VIRUS = os.path.join(API_LOG_ROOT, CLASS_DIRS["virus"])
+
 
 def _q_api_log_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's flagship analytic on the reference's own corpus
-    (ignores sf_dir — the corpus is fixed).  One scan, two hash aggs,
-    broadcast totals, window top-k (FeatureSelectionCloud.scala:376-442).
+    """The reference's flagship analytic on the api-log corpus: the real
+    corpus where present, else the generated one (ignores sf_dir — the
+    corpus is fixed).  One scan, two hash aggs, broadcast totals, window
+    top-k (FeatureSelectionCloud.scala:376-442).
     """
-    raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
+    raw = read_api_logs(spark, _API_LOG_CLEAN, _API_LOG_VIRUS)
     return info_gain_ranking(api_log_tokens(raw), k=2000, doc_classes=api_log_doc_classes(raw))
 
 
@@ -1364,7 +1380,7 @@ def _q_api_log_byte_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     FeatureSelectionCloud.scala:257-321) through the same IG ranking —
     dead code in the reference's main() but declared capability
     (SURVEY.md §7 hazard 4)."""
-    raw = read_api_logs(spark, _REF_CLEAN, _REF_VIRUS)
+    raw = read_api_logs(spark, _API_LOG_CLEAN, _API_LOG_VIRUS)
     return info_gain_ranking(
         api_log_byte_tokens(raw), k=100, doc_classes=api_log_doc_classes(raw)
     )
@@ -1374,9 +1390,9 @@ def _q_api_log_byte_info_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # class-from-path, basename-doc-id, per-line cleanup, and per-file
 # distinct semantics — the reference flagship gets a full value-hash
 # oracle, not just the committed-golden structural checks.
-_SQL_API_LOG_DOCS = """files AS (
+_SQL_API_LOG_DOCS = f"""files AS (
   SELECT filename, content
-  FROM read_text('/root/reference/api_logs/*_LOGS_CONVERTED/*.txt')
+  FROM read_text('{API_LOG_ROOT}/*_LOGS_CONVERTED/*.txt')
 ), lines AS (
   SELECT CASE WHEN filename LIKE '%virus_LOGS_CONVERTED%'
               THEN 'virus' ELSE 'clean' END AS class,
@@ -1391,6 +1407,7 @@ _SQL_API_LOG_DOCS = """files AS (
   -- would eat runs of CRs that Spark keeps).  The corpus is verified
   -- free of multi-CR line endings and lone-CR terminators, the one
   -- remaining case where the two readers could still split differently
+  -- (the generated corpus is written that way too)
   SELECT class || '/' || file AS doc,
          CASE WHEN class = 'virus' THEN 'pos' ELSE 'neg' END AS cls,
          regexp_replace(raw_line, chr(13) || '$', '') AS raw_line
@@ -1426,14 +1443,16 @@ CATALOG.update(
         "api_log_info_gain": QuerySpec(
             _q_api_log_info_gain,
             _SQL_API_LOG_INFO_GAIN,
-            "info-gain ranking over the real api_logs corpus (84 survivors; "
-            "also golden-checked in tests/test_reference_parity.py)",
+            "info-gain ranking over the api_logs corpus: the real corpus "
+            "where present, else the generated one (golden-checked on the "
+            "real corpus in tests/test_reference_parity.py)",
         ),
         "api_log_byte_info_gain": QuerySpec(
             _q_api_log_byte_info_gain,
             _SQL_API_LOG_BYTE_INFO_GAIN,
             "byte-mode (14-char shingle) tokenizer through the IG ranking "
-            "(createByteFeatures, FeatureSelectionCloud.scala:257-321)",
+            "(createByteFeatures, FeatureSelectionCloud.scala:257-321) over "
+            "the real api_logs corpus where present, else the generated one",
         ),
     }
 )
@@ -1854,14 +1873,15 @@ CATALOG.update(
 # --------------------------------------------------------------------------
 
 def reference_pipeline_samples(spark: SparkSession) -> DataFrame:
-    """The full reference workload as one chained plan on the
-    reference's OWN corpus: api_logs scan → IG ranking
-    (FeatureSelectionCloud.scala:376-442) → vocab vectorize (:494-519) →
-    seeded KMeans k=10 (KmeansVirus.scala:181-194) → per-sample api
-    structs (:106-135).  Consumed by the report-line and d3-tree
+    """The full reference workload as one chained plan on the api-log
+    corpus (the real corpus where present, else the generated one):
+    api_logs scan → IG ranking (FeatureSelectionCloud.scala:376-442) →
+    vocab vectorize (:494-519) → seeded KMeans k=10
+    (KmeansVirus.scala:181-194) → per-sample api structs (:106-135).
+    Consumed by the report-line and d3-tree
     builders; the chain is pinned end-to-end by a committed self-golden
-    hash in tests/test_reference_parity.py."""
-    ranked, vectors = api_log_feature_chain(spark, _REF_CLEAN, _REF_VIRUS)
+    hash on the real corpus in tests/test_reference_parity.py."""
+    ranked, vectors = api_log_feature_chain(spark, _API_LOG_CLEAN, _API_LOG_VIRUS)
     ranked = ranked.transform(tracked_cache)
     vocab = ranked.select("token", "rank")
     n_features = ranked.count()  # survivor count sizes the dense vectors
@@ -1876,9 +1896,10 @@ def reference_pipeline_samples(spark: SparkSession) -> DataFrame:
 
 def _q_reference_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """output.txt grammar rows (KmeansVirus.scala:106-135) from the full
-    chain — ignores sf_dir (the corpus is the reference's own).  Rows-
-    only at the driver (seeded KMeans in the chain); the exact artifact
-    bytes are pinned by the self-golden equality test."""
+    chain — ignores sf_dir (the corpus is fixed: the real one where
+    present, else the generated one).  Rows-only at the driver (seeded
+    KMeans in the chain); the exact artifact bytes are pinned by the
+    self-golden equality test on the real corpus."""
     return report_lines(reference_pipeline_samples(spark))
 
 
@@ -1889,7 +1910,8 @@ CATALOG.update(
             None,
             "END-TO-END reference pipeline: api_logs → IG rank → vectorize "
             "→ seeded KMeans → report lines, one chained plan "
-            "(FeatureSelectionCloud + KmeansVirus + exportJSON feed)",
+            "(FeatureSelectionCloud + KmeansVirus + exportJSON feed) over the "
+            "real api_logs corpus where present, else the generated one",
         ),
     }
 )
@@ -1897,14 +1919,15 @@ CATALOG.update(
 
 def _q_api_log_feature_job_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's ENTIRE feature-selection job as one plan on the
-    reference's own corpus (ignores sf_dir): api_logs scan → info-gain
-    top-2000 vocab (topFeatures, FeatureSelectionCloud.scala:376-442) →
+    api-log corpus, the real one where present, else the generated one
+    (ignores sf_dir): api_logs scan → info-gain top-2000 vocab
+    (topFeatures, FeatureSelectionCloud.scala:376-442) →
     per-doc vocab match → LIBSVM lines (:494-519).  This is the
     deterministic end-to-end half of the reference workload (everything
     main() writes except the seeded-KMeans leg), benchmarked in
     bench.py HEADLINE against BASELINE.md's ≈3,200-job design note.
     Doc ids keep their literal spaces, as DuckDB read_text does."""
-    return api_log_libsvm_lines(spark, _REF_CLEAN, _REF_VIRUS)
+    return api_log_libsvm_lines(spark, _API_LOG_CLEAN, _API_LOG_VIRUS)
 
 
 _SQL_API_LOG_FEATURE_JOB_E2E = (
@@ -1917,9 +1940,10 @@ CATALOG.update(
         "api_log_feature_job_e2e": QuerySpec(
             _q_api_log_feature_job_e2e,
             _SQL_API_LOG_FEATURE_JOB_E2E,
-            "the reference feature-selection job END-TO-END on the real "
-            "api_logs corpus: scan → IG top-2000 vocab → LIBSVM lines, "
-            "one chained plan with a full value-hash oracle",
+            "the reference feature-selection job END-TO-END on the api_logs "
+            "corpus (the real corpus where present, else the generated one): "
+            "scan → IG top-2000 vocab → LIBSVM lines, one chained plan with a "
+            "full value-hash oracle",
         ),
     }
 )
