@@ -321,16 +321,6 @@ def _minhash_mins(
     )
 
 
-def minhash_signatures(documents: DataFrame, n: int = 3, k: int = 32) -> DataFrame:
-    """MinHash signatures in long form: ``(doc_id, i, h)`` for i ∈ 1..k."""
-    return _minhash_mins(documents, n, k).select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"_h{i}") for i in range(1, k + 1)])).alias(
-            "i0", "h"
-        ),
-    ).select("doc_id", (F.col("i0") + 1).alias("i"), "h")
-
-
 def minhash_band_keys(
     documents: DataFrame,
     n: int = 3,

@@ -156,6 +156,10 @@ def _ivf_search(
     )
 
 
+#: partitions of the IVF quantizer's training input (see :func:`ivf_topk`)
+IVF_TRAIN_PARTITIONS = 8
+
+
 def ivf_topk(
     embeddings: DataFrame,
     n_queries: int = 10,
@@ -190,7 +194,14 @@ def ivf_topk(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    fanned = fan_out(embeddings)
+    # k-means|| samples per input partition, so the training layout is
+    # fixed by the data alone: hash on vec_id into a constant partition
+    # count, sorted within each partition.  A layout that follows the
+    # input's partitioning or the session's core count would move the
+    # answer with them.
+    fanned = embeddings.repartition(IVF_TRAIN_PARTITIONS, "vec_id").sortWithinPartitions(
+        "vec_id"
+    )
     with_vec = fanned.withColumn(
         "_v", array_to_vector(F.col("embedding").cast("array<double>"))
     ).transform(tracked_cache)

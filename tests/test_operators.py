@@ -193,6 +193,21 @@ def test_ivf_recall_vs_bruteforce(spark):
         assert abs(bf[key] - ivf[key]) < 1e-9
 
 
+def test_ivf_answer_ignores_input_partitioning(spark):
+    """k-means|| samples per input partition, so the quantizer must be
+    trained on a layout fixed by the data: the same embeddings arriving
+    in 1 or 9 partitions give the same top-k rows."""
+    from big_data_virus_analysis_spark.operators.similarity import ivf_topk
+
+    from conftest import SMOKE_SF_DIR
+
+    emb = load_table(spark, SMOKE_SF_DIR, "embeddings")
+    one = ivf_topk(emb.coalesce(1), 10, 5).collect()
+    nine = ivf_topk(emb.repartition(9, "vec_id"), 10, 5).collect()
+    assert len(one) == 50
+    assert sorted(one) == sorted(nine)
+
+
 def test_blocked_near_dup_equals_all_pairs(spark):
     """Triangle-blocked matmul candidates + JVM verify is an
     OPTIMIZATION of the thresholded all-pairs join, not an
