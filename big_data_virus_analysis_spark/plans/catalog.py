@@ -19,32 +19,48 @@ order-insensitive value-hash comparison deterministic:
   add ``+ 0.0`` after the round on BOTH sides — IEEE −0.0 and +0.0
   hash-serialize differently, and engines may disagree on which one a
   near-zero rounds to (see `standardize_embeddings`, covariance cells).
+
+How packs register: this file's own packs and every module under
+``plans/`` that defines a ``SPECS`` dict (name → :class:`QuerySpec`,
+the type defined in ``plans/__init__.py``) all go through
+``_register_pack``; the modules are found by listing the package, so
+adding a pack module needs no edit here.  Query names must be unique
+across the catalog: a name already registered raises ``ValueError``.
+``_finalize_order`` then puts the first-50 window (``_FIRST_WINDOW``)
+first; the remaining entries keep registration order (this file's
+packs, then the modules by name).
 """
 
 from __future__ import annotations
 
+import importlib
 import os
+import pkgutil
 from collections.abc import Callable
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import QuerySpec
+from .frames import (
+    SQL_ASOF_LAST_PURCHASE,
+    SQL_DEDUP_CLUSTER_ASSIGN,
+    SQL_EMBEDDING_COVARIANCE_CELLS,
+    SQL_EMB_BASE,
+    SQL_KNN_VOTES_BODY,
+    SQL_MINHASH_LSH_PAIRS,
+    SQL_QUALITY_SCORE,
+    SQL_SHINGLE_IDS,
+    TOKS_SQL,
+    minhash_band_sql,
+    minhash_lsh_sql,
+)
 from ..operators.caching import release_tracked_caches, tracked_cache
 from ..sources.tables import load_table, register_views
 from ..operators.features import document_tokens, info_gain_ranking
 from ..operators.entropy_score import weighted_average_entropy
 from ..operators.sessions import sessionize, tumbling_window_agg
 from ..functions.text import label_encode, shingles
-
-
-@dataclass(frozen=True)
-class QuerySpec:
-    """One catalog entry: Spark plan + DuckDB oracle + provenance note."""
-
-    spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # None → non-SQL-expressible; driver does rows-only check
-    doc: str = ""
 
 
 # --------------------------------------------------------------------------
@@ -530,52 +546,67 @@ FROM sh GROUP BY doc_id
 # Registry
 # --------------------------------------------------------------------------
 
-CATALOG: dict[str, QuerySpec] = {
-    "info_gain_topk": QuerySpec(
-        _q_info_gain_topk,
-        _SQL_INFO_GAIN_TOPK,
-        "flagship: tokenize → doc-freq → IG → top-k (FeatureSelectionCloud.scala:376-442)",
-    ),
-    "scan_filter_project": QuerySpec(
-        _q_scan_filter_project, _SQL_SCAN_FILTER_PROJECT, "scan + pushdown filter + project"
-    ),
-    "agg_pricing_summary": QuerySpec(
-        _q_agg_pricing_summary, _SQL_AGG_PRICING_SUMMARY, "hash aggregate w/ partial agg"
-    ),
-    "join_orders_customer": QuerySpec(
-        _q_join_orders_customer, _SQL_JOIN_ORDERS_CUSTOMER, "inner equi-join + agg"
-    ),
-    "broadcast_dim_rollup": QuerySpec(
-        _q_broadcast_dim_rollup, _SQL_BROADCAST_DIM_ROLLUP, "broadcast dimension joins"
-    ),
-    "window_rank_parts": QuerySpec(
-        _q_window_rank_parts, _SQL_WINDOW_RANK_PARTS, "partitioned row_number rank"
-    ),
-    "topk_orders": QuerySpec(_q_topk_orders, _SQL_TOPK_ORDERS, "global top-k"),
-    "semi_join_vocab": QuerySpec(
-        _q_semi_join_vocab, _SQL_SEMI_JOIN_VOCAB, "left-semi vocabulary membership probe"
-    ),
-    "label_encode_orders": QuerySpec(
-        _q_label_encode_orders, _SQL_LABEL_ENCODE_ORDERS, "conditional label encode"
-    ),
-    "union_classes": QuerySpec(_q_union_classes, _SQL_UNION_CLASSES, "n-way union"),
-    "distinct_events": QuerySpec(
-        _q_distinct_events, _SQL_DISTINCT_EVENTS, "dropDuplicates on key subset"
-    ),
-    "count_by_value": QuerySpec(_q_count_by_value, _SQL_COUNT_BY_VALUE, "countByValue analog"),
-    "cluster_entropy": QuerySpec(
-        _q_cluster_entropy, _SQL_CLUSTER_ENTROPY, "weighted average cluster entropy (SVMDT.scala:253-285)"
-    ),
-    "sessionize_events": QuerySpec(
-        _q_sessionize_events, _SQL_SESSIONIZE_EVENTS, "gap-based sessionization"
-    ),
-    "tumbling_window_events": QuerySpec(
-        _q_tumbling_window_events, _SQL_TUMBLING_WINDOW_EVENTS, "tumbling event-time windows"
-    ),
-    "shingle_documents": QuerySpec(
-        _q_shingle_documents, _SQL_SHINGLE_DOCUMENTS, "sliding-window char shingling"
-    ),
-}
+CATALOG: dict[str, QuerySpec] = {}
+
+
+def _register_pack(specs: dict[str, QuerySpec]) -> None:
+    """Merge a pack into CATALOG, refusing silent overwrites — a pack
+    entry colliding with an existing query name is a bug (it would
+    shadow an already-verified entry), not an update."""
+    dup = sorted(set(specs) & set(CATALOG))
+    if dup:
+        raise ValueError(f"catalog pack collides with existing entries: {dup}")
+    CATALOG.update(specs)
+
+
+_register_pack(
+    {
+        "info_gain_topk": QuerySpec(
+            _q_info_gain_topk,
+            _SQL_INFO_GAIN_TOPK,
+            "flagship: tokenize → doc-freq → IG → top-k (FeatureSelectionCloud.scala:376-442)",
+        ),
+        "scan_filter_project": QuerySpec(
+            _q_scan_filter_project, _SQL_SCAN_FILTER_PROJECT, "scan + pushdown filter + project"
+        ),
+        "agg_pricing_summary": QuerySpec(
+            _q_agg_pricing_summary, _SQL_AGG_PRICING_SUMMARY, "hash aggregate w/ partial agg"
+        ),
+        "join_orders_customer": QuerySpec(
+            _q_join_orders_customer, _SQL_JOIN_ORDERS_CUSTOMER, "inner equi-join + agg"
+        ),
+        "broadcast_dim_rollup": QuerySpec(
+            _q_broadcast_dim_rollup, _SQL_BROADCAST_DIM_ROLLUP, "broadcast dimension joins"
+        ),
+        "window_rank_parts": QuerySpec(
+            _q_window_rank_parts, _SQL_WINDOW_RANK_PARTS, "partitioned row_number rank"
+        ),
+        "topk_orders": QuerySpec(_q_topk_orders, _SQL_TOPK_ORDERS, "global top-k"),
+        "semi_join_vocab": QuerySpec(
+            _q_semi_join_vocab, _SQL_SEMI_JOIN_VOCAB, "left-semi vocabulary membership probe"
+        ),
+        "label_encode_orders": QuerySpec(
+            _q_label_encode_orders, _SQL_LABEL_ENCODE_ORDERS, "conditional label encode"
+        ),
+        "union_classes": QuerySpec(_q_union_classes, _SQL_UNION_CLASSES, "n-way union"),
+        "distinct_events": QuerySpec(
+            _q_distinct_events, _SQL_DISTINCT_EVENTS, "dropDuplicates on key subset"
+        ),
+        "count_by_value": QuerySpec(_q_count_by_value, _SQL_COUNT_BY_VALUE, "countByValue analog"),
+        "cluster_entropy": QuerySpec(
+            _q_cluster_entropy, _SQL_CLUSTER_ENTROPY, "weighted average cluster entropy (SVMDT.scala:253-285)"
+        ),
+        "sessionize_events": QuerySpec(
+            _q_sessionize_events, _SQL_SESSIONIZE_EVENTS, "gap-based sessionization"
+        ),
+        "tumbling_window_events": QuerySpec(
+            _q_tumbling_window_events, _SQL_TUMBLING_WINDOW_EVENTS, "tumbling event-time windows"
+        ),
+        "shingle_documents": QuerySpec(
+            _q_shingle_documents, _SQL_SHINGLE_DOCUMENTS, "sliding-window char shingling"
+        ),
+    }
+)
 
 
 def _self_cleaning(fn: Callable[[SparkSession, str], DataFrame]):
@@ -683,69 +714,9 @@ JOIN sizes sb ON doc_b = sb.doc_id
 WHERE round(CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE), 6) >= 0.8
 """
 
-_SQL_SHINGLE_IDS = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), grams AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(tokens) - 2),
-         i -> array_to_string(list_slice(tokens, i, i + 2), ' '))) AS gram
-  FROM toks WHERE len(tokens) >= 3
-), dg AS (
-  SELECT DISTINCT doc_id, gram FROM grams
-), ids AS (
-  -- tid = md5-prefix BIGINT (bit-identical to Spark's conv(substring(md5)..));
-  -- reduce mod 2^31 before the multiply so the product stays < 2^63
-  SELECT doc_id,
-         ((CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT) % 2147483648)
-          * 2654435761) % 2147483648 AS s
-  FROM dg
-)
-"""
-
 
 def _q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"), n=3, k=32, bands=8)
-
-
-def _minhash_sig_ctes(k: int, rows_per_band: int) -> str:
-    """Signature + banding CTEs (through ``band_keys``) over an
-    ``ids(doc_id, s)`` CTE (mirrors operators/dedup.py::_family exactly
-    — mask, not mod; no division).  Shared with the round-11
-    cross-corpus alignment oracles."""
-    return f"""
-, sig AS (
-  -- odd-multiplier linear permutation mod 2^31
-  SELECT doc_id, i,
-         min(((((2654435761 * (2 * i + 1)) % 2147483648) | 1) * s + 7919 * i)
-             & 2147483647) AS h
-  FROM ids CROSS JOIN (SELECT unnest(generate_series(1, {k})) AS i)
-  GROUP BY doc_id, i
-), band_keys AS (
-  SELECT doc_id, CAST((i - 1) // {rows_per_band} AS INT) AS band,
-         string_agg(CAST(h AS VARCHAR), ',' ORDER BY i) AS key
-  FROM sig GROUP BY doc_id, band
-)"""
-
-
-def _minhash_band_sql(k: int, rows_per_band: int) -> str:
-    """Signature + banding + candidate self-join suffix."""
-    return (
-        _minhash_sig_ctes(k, rows_per_band)
-        + """
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared_bands
-FROM band_keys a
-JOIN band_keys b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-GROUP BY doc_a, doc_b
-"""
-    )
-
-
-def _minhash_lsh_sql(k: int, rows_per_band: int) -> str:
-    """Parameterized MinHash+LSH oracle over md5 STRING grams."""
-    return _SQL_SHINGLE_IDS + _minhash_band_sql(k, rows_per_band)
-
-
-_SQL_MINHASH_LSH_PAIRS = _minhash_lsh_sql(32, 4)
 
 
 def _q_minhash_lsh_pairs_k16(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -810,14 +781,14 @@ WITH toks AS (
 )
 """
 
-_SQL_MINHASH_LSH_PAIRS_FAST_DET = _SQL_COMPOSE_IDS + _minhash_band_sql(32, 4)
+_SQL_MINHASH_LSH_PAIRS_FAST_DET = _SQL_COMPOSE_IDS + minhash_band_sql(32, 4)
 
 
 def _q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_docs(load_table(spark, sf_dir, "documents"), n=3, bits=31)
 
 
-_SQL_SIMHASH_BASE = _SQL_SHINGLE_IDS + """
+_SQL_SIMHASH_BASE = SQL_SHINGLE_IDS + """
 , mixed AS (
   SELECT doc_id, (xor(s, s >> 13) * 1103515245) % 2147483648 AS h2 FROM ids
 ), contribs AS (
@@ -846,7 +817,7 @@ FROM sims a JOIN sims b ON a.doc_id < b.doc_id
 WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
 """
 
-CATALOG.update(
+_register_pack(
     {
         "dedup_exact": QuerySpec(
             _q_dedup_exact, _SQL_DEDUP_EXACT, "exact dedup by md5 content hash"
@@ -865,7 +836,7 @@ CATALOG.update(
         ),
         "minhash_lsh_pairs": QuerySpec(
             _q_minhash_lsh_pairs,
-            _SQL_MINHASH_LSH_PAIRS,
+            SQL_MINHASH_LSH_PAIRS,
             "MinHash(k=32) + LSH(8 bands) candidate pairs",
         ),
         "minhash_lsh_pairs_fast": QuerySpec(
@@ -882,7 +853,7 @@ CATALOG.update(
         ),
         "minhash_lsh_pairs_k16": QuerySpec(
             _q_minhash_lsh_pairs_k16,
-            _minhash_lsh_sql(16, 4),
+            minhash_lsh_sql(16, 4),
             "half-cost signature twin: MinHash(k=16) + LSH(4 bands), same "
             "r=4 band selectivity; recall/cost measured in SCALING.md",
         ),
@@ -907,24 +878,12 @@ from ..operators.similarity import (  # noqa: E402
     knn_label_vote,
 )
 
-# element/norm views shared by every embedding oracle: explicit DOUBLE
-# casts (DuckDB's list_cosine_similarity computes in float32 — not
-# oracle-safe against Spark's double fold)
-_SQL_EMB_BASE = """
-WITH elems AS (
-  SELECT vec_id, i, CAST(embedding[i] AS DOUBLE) AS x
-  FROM embeddings CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-), norms AS (
-  SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM elems GROUP BY vec_id
-)
-"""
-
 
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(load_table(spark, sf_dir, "embeddings"), n_queries=10, k=5)
 
 
-_SQL_COSINE_TOPK = _SQL_EMB_BASE + """
+_SQL_COSINE_TOPK = SQL_EMB_BASE + """
 , dots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS cand_id, sum(q.x * c.x) AS dot
   FROM elems q JOIN elems c ON q.i = c.i AND c.vec_id <> q.vec_id
@@ -948,7 +907,7 @@ def _q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_lsh_topk(load_table(spark, sf_dir, "embeddings"), n_queries=10, k=5)
 
 
-_SQL_ANN_LSH_TOPK = _SQL_EMB_BASE + """
+_SQL_ANN_LSH_TOPK = SQL_EMB_BASE + """
 , planes AS (
   SELECT j, d,
          ((1103515245 * (j * 64 + (d - 1)) + 12345) % 2147483648) / 2147483648.0 - 0.5 AS wgt
@@ -987,7 +946,7 @@ def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_near_dup_pairs(load_table(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
-_SQL_EMBEDDING_NEAR_DUP = _SQL_EMB_BASE + """
+_SQL_EMBEDDING_NEAR_DUP = SQL_EMB_BASE + """
 , dots AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, sum(a.x * b.x) AS dot
   FROM elems a JOIN elems b ON a.i = b.i AND a.vec_id < b.vec_id
@@ -1011,38 +970,13 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: shared oracle body ending in ``votes(query_id, label, votes)`` — the
-#: kNN vote tallies.  Named constant so knn_label_vote and the
-#: label-noise audit (plans/round4_ops.py) consume the same fragment.
-SQL_KNN_VOTES_BODY = _SQL_EMB_BASE + """
-, dots AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS cand_id, sum(q.x * c.x) AS dot
-  FROM elems q JOIN elems c ON q.i = c.i AND c.vec_id <> q.vec_id
-  WHERE q.vec_id < 50
-  GROUP BY 1, 2
-), sims AS (
-  SELECT query_id, cand_id, round(dot / (nq.nrm * nc.nrm), 6) AS sim
-  FROM dots
-  JOIN norms nq ON query_id = nq.vec_id
-  JOIN norms nc ON cand_id = nc.vec_id
-), topk AS (
-  SELECT query_id, cand_id
-  FROM sims
-  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, cand_id ASC) <= 5
-), votes AS (
-  SELECT t.query_id, e.label, count(*) AS votes
-  FROM topk t JOIN embeddings e ON t.cand_id = e.vec_id
-  GROUP BY 1, 2
-)
-"""
-
 _SQL_KNN_LABEL_VOTE = SQL_KNN_VOTES_BODY + """
 SELECT query_id, label AS pred_label, votes
 FROM votes
 QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, label ASC) = 1
 """
 
-CATALOG.update(
+_register_pack(
     {
         "cosine_topk_bruteforce": QuerySpec(
             _q_cosine_topk, _SQL_COSINE_TOPK, "brute-force cosine top-k (broadcast queries)"
@@ -1080,15 +1014,13 @@ from ..operators.text_quality import (  # noqa: E402
     token_stats,
 )
 
-_TOKS_SQL = "list_filter(string_split(text, ' '), x -> length(x) > 0)"
-
 
 def _q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_stats(load_table(spark, sf_dir, "documents"))
 
 
 _SQL_TOKEN_STATS = f"""
-WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents)
+WITH t AS (SELECT doc_id, text, {TOKS_SQL} AS toks FROM documents)
 SELECT doc_id,
        length(text) AS n_chars,
        len(toks) AS n_ws_tokens,
@@ -1098,31 +1030,10 @@ SELECT doc_id,
 FROM t
 """
 
-_EN_STOPS_SQL = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"])
-
 
 def _q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_score(load_table(spark, sf_dir, "documents"))
 
-
-_SQL_QUALITY_SCORE = f"""
-WITH t AS (SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents),
-parts AS (
-  SELECT doc_id,
-         CAST(len(list_filter(toks, x -> x IN ({_EN_STOPS_SQL}))) AS DOUBLE)
-           / CAST(len(toks) AS DOUBLE) AS stop_frac,
-         least(1.0, CAST(len(toks) AS DOUBLE) / 100.0) AS len_score,
-         CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-           / CAST(length(text) AS DOUBLE) AS alpha_frac
-  FROM t
-)
-SELECT doc_id,
-       round(stop_frac, 6) AS stop_frac,
-       round(len_score, 6) AS len_score,
-       round(alpha_frac, 6) AS alpha_frac,
-       round(0.4 * stop_frac + 0.3 * len_score + 0.3 * alpha_frac, 6) AS score
-FROM parts
-"""
 
 _LW_VALUES = ", ".join(
     f"('{lang}', '{w}')"
@@ -1142,7 +1053,7 @@ SQL_LANG_SCORED_BODY = f"""
 WITH lw(cand_lang, word) AS (VALUES {_LW_VALUES}),
 langs AS (SELECT DISTINCT cand_lang FROM lw),
 tokens AS (
-  SELECT doc_id, unnest({_TOKS_SQL}) AS word FROM documents
+  SELECT doc_id, unnest({TOKS_SQL}) AS word FROM documents
 ),
 n_tokens AS (SELECT doc_id, count(*) AS n_toks FROM tokens GROUP BY doc_id),
 hits AS (
@@ -1203,13 +1114,13 @@ SELECT doc_id, count(*) AS n_fp, CAST(sum(wmin) AS BIGINT) AS fp_checksum
 FROM mins GROUP BY doc_id
 """
 
-CATALOG.update(
+_register_pack(
     {
         "token_stats": QuerySpec(
             _q_token_stats, _SQL_TOKEN_STATS, "whitespace + regex token counting per doc"
         ),
         "quality_score": QuerySpec(
-            _q_quality_score, _SQL_QUALITY_SCORE, "stopword/length/alpha quality heuristic"
+            _q_quality_score, SQL_QUALITY_SCORE, "stopword/length/alpha quality heuristic"
         ),
         "language_id": QuerySpec(
             _q_language_id, _SQL_LANGUAGE_ID, "stopword-profile language identification"
@@ -1309,7 +1220,7 @@ FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 
-CATALOG.update(
+_register_pack(
     {
         "payload_metadata_stats": QuerySpec(
             _q_payload_metadata_stats,
@@ -1339,7 +1250,7 @@ CATALOG.update(
 # the DuckDB oracles read the same text files)
 # --------------------------------------------------------------------------
 
-from ..sources.api_log_corpus import CLASS_DIRS, generated_corpus_root  # noqa: E402
+from ..sources.api_log_corpus import CLASS_DIRS, api_log_root  # noqa: E402
 from ..sources.api_logs import (  # noqa: E402
     api_log_byte_tokens,
     api_log_doc_classes,
@@ -1349,18 +1260,11 @@ from ..sources.api_logs import (  # noqa: E402
     read_api_logs,
 )
 
-_REF_CLEAN = "/root/reference/api_logs/clean_LOGS_CONVERTED"
-_REF_VIRUS = "/root/reference/api_logs/virus_LOGS_CONVERTED"
-
 #: the one corpus root the api-log entries' plans and oracles read,
 #: resolved at import: the reference's own corpus where both class
 #: directories exist, else the generated one (written once under the
-#: temp dir; sources/api_log_corpus.py)
-API_LOG_ROOT = (
-    os.path.dirname(_REF_CLEAN)
-    if os.path.isdir(_REF_CLEAN) and os.path.isdir(_REF_VIRUS)
-    else generated_corpus_root()
-)
+#: temp dir; sources/api_log_corpus.py::api_log_root)
+API_LOG_ROOT = api_log_root()
 _API_LOG_CLEAN = os.path.join(API_LOG_ROOT, CLASS_DIRS["clean"])
 _API_LOG_VIRUS = os.path.join(API_LOG_ROOT, CLASS_DIRS["virus"])
 
@@ -1438,7 +1342,7 @@ _SQL_API_LOG_BYTE_INFO_GAIN = _sql_ig_vocab(
 ) + "SELECT * FROM vocab\n"
 
 
-CATALOG.update(
+_register_pack(
     {
         "api_log_info_gain": QuerySpec(
             _q_api_log_info_gain,
@@ -1538,7 +1442,7 @@ FROM events
 GROUP BY user_id
 """
 
-CATALOG.update(
+_register_pack(
     {
         "sliding_window_events": QuerySpec(
             _q_sliding_window_events,
@@ -1797,7 +1701,7 @@ FROM clusters
 """
 
 
-CATALOG.update(
+_register_pack(
     {
         "vectorize_doc_indices": QuerySpec(
             _q_vectorize_doc_indices,
@@ -1903,7 +1807,7 @@ def _q_reference_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return report_lines(reference_pipeline_samples(spark))
 
 
-CATALOG.update(
+_register_pack(
     {
         "reference_pipeline_report": QuerySpec(
             _q_reference_pipeline_report,
@@ -1935,7 +1839,7 @@ _SQL_API_LOG_FEATURE_JOB_E2E = (
 )
 
 
-CATALOG.update(
+_register_pack(
     {
         "api_log_feature_job_e2e": QuerySpec(
             _q_api_log_feature_job_e2e,
@@ -2043,7 +1947,7 @@ GROUP BY GROUPING SETS ((user_id), (event_type), ())
 """
 
 
-CATALOG.update(
+_register_pack(
     {
         "rollup_pricing": QuerySpec(
             _q_rollup_pricing,
@@ -2126,7 +2030,7 @@ GROUP BY o_orderpriority
 """
 
 
-CATALOG.update(
+_register_pack(
     {
         "stats_price_summary": QuerySpec(
             _q_stats_price_summary,
@@ -2165,14 +2069,6 @@ def _q_asof_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("ts_us"),
         F.unix_micros("ts_lp").alias("last_purchase_us"),
     )
-
-
-_SQL_ASOF_LAST_PURCHASE = """
-SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, epoch_us(p.ts) AS last_purchase_us
-FROM events e
-ASOF LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
-  ON e.user_id = p.user_id AND e.ts >= p.ts
-"""
 
 
 def _q_anti_join_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2261,11 +2157,11 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-CATALOG.update(
+_register_pack(
     {
         "asof_last_purchase": QuerySpec(
             _q_asof_last_purchase,
-            _SQL_ASOF_LAST_PURCHASE,
+            SQL_ASOF_LAST_PURCHASE,
             "as-of join via union+running-window (operators/asof.py) vs native "
             "DuckDB ASOF JOIN",
         ),
@@ -2331,7 +2227,7 @@ GROUP BY err_id
 """
 
 
-CATALOG.update(
+_register_pack(
     {
         "interval_join_error_clicks": QuerySpec(
             _q_interval_join_error_clicks,
@@ -2368,7 +2264,7 @@ def _q_approx_percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CATALOG.update(
+_register_pack(
     {
         "approx_distinct_users": QuerySpec(
             _q_approx_distinct_users,
@@ -2464,28 +2360,6 @@ def _q_dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(minhash_lsh_pairs(docs, n=3, k=32, bands=8))
 
 
-# transitive closure of the (tiny) LSH pair graph via recursive CTE;
-# cluster id = min over each node's reachable set — exactly the
-# fixpoint min-label propagation computes
-_SQL_DEDUP_CLUSTER_ASSIGN = (
-    "WITH RECURSIVE pairs AS (\n"
-    + _SQL_MINHASH_LSH_PAIRS
-    + """
-), edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-), reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
-SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
-FROM reach GROUP BY src
-"""
-)
-
-
 def _q_dedup_cluster_assign_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same components via large-star/small-star (Kiveris et al.) —
     O(log²n) rounds independent of diameter, the 100 TB path for
@@ -2501,7 +2375,7 @@ def _q_quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantized_cosine_topk(load_table(spark, sf_dir, "embeddings"), n_queries=10, k=5)
 
 
-_SQL_QUANTIZED_COSINE_TOPK = _SQL_EMB_BASE + """
+_SQL_QUANTIZED_COSINE_TOPK = SQL_EMB_BASE + """
 , scales AS (
   SELECT vec_id, max(abs(x)) AS s FROM elems GROUP BY vec_id
 ), q AS (
@@ -2531,7 +2405,7 @@ FROM sims
 QUALIFY rank <= 5
 """
 
-CATALOG.update(
+_register_pack(
     {
         "tfidf_top_terms": QuerySpec(
             _q_tfidf_top_terms,
@@ -2553,13 +2427,13 @@ CATALOG.update(
         ),
         "dedup_cluster_assign": QuerySpec(
             _q_dedup_cluster_assign,
-            _SQL_DEDUP_CLUSTER_ASSIGN,
+            SQL_DEDUP_CLUSTER_ASSIGN,
             "connected components over MinHash-LSH pairs: min-label propagation "
             "to fixpoint; cluster id = canonical (min) doc",
         ),
         "dedup_cluster_assign_two_phase": QuerySpec(
             _q_dedup_cluster_assign_two_phase,
-            _SQL_DEDUP_CLUSTER_ASSIGN,
+            SQL_DEDUP_CLUSTER_ASSIGN,
             "same components via large-star/small-star — O(log²n) rounds "
             "independent of diameter; oracle shared with the propagation twin",
         ),
@@ -2657,7 +2531,7 @@ ORDER BY revenue DESC, l_orderkey ASC
 LIMIT 10
 """
 
-CATALOG.update(
+_register_pack(
     {
         "segment_activity": QuerySpec(
             _q_segment_activity,
@@ -2706,7 +2580,7 @@ FROM (
 WHERE o_totalprice > cust_avg
 """
 
-CATALOG.update(
+_register_pack(
     {
         "orders_above_cust_avg": QuerySpec(
             _q_orders_above_cust_avg,
@@ -2778,7 +2652,7 @@ WHERE r_name = 'ASIA'
 GROUP BY n_name
 """
 
-CATALOG.update(
+_register_pack(
     {
         "local_supplier_volume": QuerySpec(
             _q_local_supplier_volume,
@@ -2830,7 +2704,7 @@ JOIN orders   ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 """
 
-CATALOG.update(
+_register_pack(
     {
         "large_quantity_orders": QuerySpec(
             _q_large_quantity_orders,
@@ -2852,7 +2726,7 @@ def _q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_DEDUP_SURVIVORS = (
     "WITH RECURSIVE pairs AS (\n"
-    + _SQL_MINHASH_LSH_PAIRS
+    + SQL_MINHASH_LSH_PAIRS
     + """
 ), edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -2871,7 +2745,7 @@ WHERE doc_id NOT IN (SELECT doc_id FROM assign WHERE doc_id <> cluster_id)
 """
 )
 
-CATALOG.update(
+_register_pack(
     {
         "dedup_survivors": QuerySpec(
             _q_dedup_survivors,
@@ -2929,7 +2803,7 @@ SELECT user_id, total_value,
 FROM per_user
 """
 
-CATALOG.update(
+_register_pack(
     {
         "user_value_deciles": QuerySpec(
             _q_user_value_deciles,
@@ -3002,7 +2876,7 @@ UNION ALL
 SELECT 3 AS stage, 'purchase' AS step_name, count(*) AS n_users FROM s3
 """
 
-CATALOG.update(
+_register_pack(
     {
         "props_k_stats": QuerySpec(
             _q_props_k_stats,
@@ -3055,7 +2929,7 @@ FROM byweek JOIN first USING (user_id)
 GROUP BY 1, 2
 """
 
-CATALOG.update(
+_register_pack(
     {
         "cohort_retention": QuerySpec(
             _q_cohort_retention,
@@ -3108,7 +2982,7 @@ def _q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CATALOG.update(
+_register_pack(
     {
         "price_histogram": QuerySpec(
             _q_price_histogram,
@@ -3157,7 +3031,7 @@ FROM (
 GROUP BY measure
 """
 
-CATALOG.update(
+_register_pack(
     {
         "unpivot_measures": QuerySpec(
             _q_unpivot_measures,
@@ -3183,7 +3057,7 @@ def _q_heavy_hitter_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CATALOG.update(
+_register_pack(
     {
         "heavy_hitter_users": QuerySpec(
             _q_heavy_hitter_users,
@@ -3223,7 +3097,7 @@ SELECT doc_id,
 FROM documents
 """
 
-CATALOG.update(
+_register_pack(
     {
         "pii_scrub": QuerySpec(
             _q_pii_scrub,
@@ -3255,7 +3129,7 @@ JOIN (SELECT * FROM events WHERE event_type = 'click') c
  AND c.ts <= v.ts + INTERVAL 10 MINUTE
 """
 
-CATALOG.update(
+_register_pack(
     {
         "clicks_after_views": QuerySpec(
             _q_clicks_after_views,
@@ -3556,7 +3430,7 @@ FROM orders b FULL OUTER JOIN chg c ON b.o_orderkey = c.o_orderkey
 """
 
 
-CATALOG.update(
+_register_pack(
     {
         "topk_parts_per_brand": QuerySpec(
             _q_topk_parts_per_brand,
@@ -3775,7 +3649,7 @@ LIMIT 100
 """
 
 
-CATALOG.update(
+_register_pack(
     {
         "promo_revenue_by_month": QuerySpec(
             _q_promo_revenue_by_month,
@@ -3837,35 +3711,6 @@ def _q_embedding_covariance_cells(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..ml.pca import covariance_cells
 
     return covariance_cells(load_table(spark, sf_dir, "embeddings"))
-
-
-_SQL_EMBEDDING_COVARIANCE_CELLS = """
-WITH pairs AS (
-  SELECT i, j,
-         CAST(embedding[i + 1] AS DOUBLE) * CAST(embedding[j + 1] AS DOUBLE) AS xy
-  FROM embeddings,
-       UNNEST(range(0, len(embedding))) t(i),
-       UNNEST(range(0, len(embedding))) u(j)
-  WHERE j >= i
-), cells AS (
-  SELECT i, j,
-         CAST(count(*) AS DOUBLE) AS n,
-         sum(CAST(xy AS DECIMAL(28,12))) AS sxy
-  FROM pairs GROUP BY 1, 2
-), grid AS (
-  SELECT i AS pos, CAST(embedding[i + 1] AS DOUBLE) AS xd
-  FROM embeddings, UNNEST(range(0, len(embedding))) t(i)
-), means AS (
-  SELECT pos,
-         CAST(sum(CAST(xd AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-  FROM grid GROUP BY pos
-)
-SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
-       round(CAST(sxy AS DOUBLE) / n - mi.m * mj.m, 6) + 0.0 AS cov
-FROM cells
-JOIN means mi ON i = mi.pos
-JOIN means mj ON j = mj.pos
-"""
 
 
 #: the engine's SQL-text surface: this exact ANSI string runs through
@@ -4000,7 +3845,7 @@ JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst
 """
 
 
-CATALOG.update(
+_register_pack(
     {
         "copurchase_pagerank": QuerySpec(
             _q_copurchase_pagerank,
@@ -4034,165 +3879,12 @@ CATALOG.update(
         ),
         "embedding_covariance_cells": QuerySpec(
             _q_embedding_covariance_cells,
-            _SQL_EMBEDDING_COVARIANCE_CELLS,
+            SQL_EMBEDDING_COVARIANCE_CELLS,
             "distributed d×d covariance aggregation (the PCA gram pass), "
             "DECIMAL-exact cells",
         ),
     }
 )
-
-
-# --------------------------------------------------------------------------
-# Decision-support pack (classic TPC-H shapes; plans/decision_support.py)
-# --------------------------------------------------------------------------
-
-from .decision_support import SPECS as _DECISION_SUPPORT_SPECS  # noqa: E402
-
-CATALOG.update(_DECISION_SUPPORT_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Pipeline-operations pack (everyday data-engineering ops; plans/pipeline_ops.py)
-# --------------------------------------------------------------------------
-
-from .pipeline_ops import SPECS as _PIPELINE_OPS_SPECS  # noqa: E402
-
-CATALOG.update(_PIPELINE_OPS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Statistics pack (order stats, argmax, corr/OLS, mode, Benford;
-# plans/statistics.py)
-# --------------------------------------------------------------------------
-
-from .statistics import SPECS as _STATISTICS_SPECS  # noqa: E402
-
-CATALOG.update(_STATISTICS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Outliers / robust-stats pack (z-score, MAD, repetition, attribution;
-# plans/outliers.py)
-# --------------------------------------------------------------------------
-
-from .outliers import SPECS as _OUTLIERS_SPECS  # noqa: E402
-
-CATALOG.update(_OUTLIERS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Time-series / BI pack (WAU, MoM growth, Pareto; plans/timeseries_bi.py)
-# --------------------------------------------------------------------------
-
-from .timeseries_bi import SPECS as _TIMESERIES_BI_SPECS  # noqa: E402
-
-CATALOG.update(_TIMESERIES_BI_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Sequence & corpus-statistics pack (Markov, paths, balance, surprisal;
-# plans/sequences.py)
-# --------------------------------------------------------------------------
-
-from .sequences import SPECS as _SEQUENCES_SPECS  # noqa: E402
-
-CATALOG.update(_SEQUENCES_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Gaps-and-islands pack (streaks, SCD2, conversion latency;
-# plans/islands.py)
-# --------------------------------------------------------------------------
-
-from .islands import SPECS as _ISLANDS_SPECS  # noqa: E402
-
-CATALOG.update(_ISLANDS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Window-function completeness pack (cume_dist, nth_value;
-# plans/window_funcs.py)
-# --------------------------------------------------------------------------
-
-from .window_funcs import SPECS as _WINDOW_FUNCS_SPECS  # noqa: E402
-
-CATALOG.update(_WINDOW_FUNCS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Integrity & incremental-maintenance pack (checksums, rollup merge;
-# plans/integrity.py)
-# --------------------------------------------------------------------------
-
-from .integrity import SPECS as _INTEGRITY_SPECS  # noqa: E402
-
-CATALOG.update(_INTEGRITY_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Profiling extensions (systematic sample, equi-depth histogram, skew
-# profile; plans/profiling_ext.py)
-# --------------------------------------------------------------------------
-
-from .profiling_ext import SPECS as _PROFILING_EXT_SPECS  # noqa: E402
-
-CATALOG.update(_PROFILING_EXT_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Corpus-curation funnel (plans/curation.py)
-# --------------------------------------------------------------------------
-
-from .curation import SPECS as _CURATION_SPECS  # noqa: E402
-
-CATALOG.update(_CURATION_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Drift & statistical-testing pack (chi-square, PSI, KS; plans/drift.py)
-# --------------------------------------------------------------------------
-
-from .drift import SPECS as _DRIFT_SPECS  # noqa: E402
-
-CATALOG.update(_DRIFT_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Survival-analysis pack (Kaplan–Meier; plans/survival.py)
-# --------------------------------------------------------------------------
-
-from .survival import SPECS as _SURVIVAL_SPECS  # noqa: E402
-
-CATALOG.update(_SURVIVAL_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Retrieval pack (BM25; plans/retrieval.py)
-# --------------------------------------------------------------------------
-
-from .retrieval import SPECS as _RETRIEVAL_SPECS  # noqa: E402
-
-CATALOG.update(_RETRIEVAL_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Training-data hygiene pack (decontamination + boilerplate;
-# plans/contamination.py)
-# --------------------------------------------------------------------------
-
-from .contamination import SPECS as _CONTAMINATION_SPECS  # noqa: E402
-
-CATALOG.update(_CONTAMINATION_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Batch-assembly pack (sequence packing via distributed prefix sum,
-# weighted sampling, leakage-safe splits; plans/packing.py)
-# --------------------------------------------------------------------------
-
-from .packing import SPECS as _PACKING_SPECS  # noqa: E402
-
-CATALOG.update(_PACKING_SPECS)
 
 
 # --------------------------------------------------------------------------
@@ -4219,7 +3911,7 @@ SELECT doc_id,
 FROM documents
 """
 
-CATALOG.update(
+_register_pack(
     {
         "resize_payload_sizes": QuerySpec(
             _q_resize_payload_sizes,
@@ -4229,26 +3921,6 @@ CATALOG.update(
         ),
     }
 )
-
-
-# --------------------------------------------------------------------------
-# RAG pack (chunking, hybrid RRF fusion, nearest-centroid assignment;
-# plans/rag.py)
-# --------------------------------------------------------------------------
-
-from .rag import SPECS as _RAG_SPECS  # noqa: E402
-
-CATALOG.update(_RAG_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Corpus-filtering pack (duplicated spans, bigram-LM perplexity;
-# plans/corpus_filters.py)
-# --------------------------------------------------------------------------
-
-from .corpus_filters import SPECS as _CORPUS_FILTERS_SPECS  # noqa: E402
-
-CATALOG.update(_CORPUS_FILTERS_SPECS)
 
 
 # --------------------------------------------------------------------------
@@ -4326,7 +3998,7 @@ FROM ex
 WHERE cum_before < q * n AND q * n <= cum
 """
 
-CATALOG.update(
+_register_pack(
     {
         "salted_dim_join_rollup": QuerySpec(
             _q_salted_dim_join_rollup,
@@ -4344,42 +4016,6 @@ CATALOG.update(
         ),
     }
 )
-
-
-# --------------------------------------------------------------------------
-# Data-mixture & training-order pack (plans/mixtures.py)
-# --------------------------------------------------------------------------
-
-from .mixtures import SPECS as _MIXTURES_SPECS  # noqa: E402
-
-CATALOG.update(_MIXTURES_SPECS)
-
-
-# --------------------------------------------------------------------------
-# SemDeDup pack (cluster-scoped semantic dedup; plans/semantic.py)
-# --------------------------------------------------------------------------
-
-from .semantic import SPECS as _SEMANTIC_SPECS  # noqa: E402
-
-CATALOG.update(_SEMANTIC_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Incremental-ingest dedup pack (plans/ingestion.py)
-# --------------------------------------------------------------------------
-
-from .ingestion import SPECS as _INGESTION_SPECS  # noqa: E402
-
-CATALOG.update(_INGESTION_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Gopher quality-rules pack (plans/gopher.py)
-# --------------------------------------------------------------------------
-
-from .gopher import SPECS as _GOPHER_SPECS  # noqa: E402
-
-CATALOG.update(_GOPHER_SPECS)
 
 
 # --------------------------------------------------------------------------
@@ -4410,7 +4046,7 @@ def _q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_segment(docs, merges)
 
 
-CATALOG.update(
+_register_pack(
     {
         "bpe_merge_table": QuerySpec(
             _q_bpe_merge_table,
@@ -4468,7 +4104,7 @@ def _q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_HARD_NEGATIVE_MINING = _SQL_EMB_BASE + """
+_SQL_HARD_NEGATIVE_MINING = SQL_EMB_BASE + """
 , lab AS (
   SELECT vec_id, label FROM embeddings
 ), dots AS (
@@ -4495,7 +4131,7 @@ FROM sims
 QUALIFY rank <= 5
 """
 
-CATALOG.update(
+_register_pack(
     {
         "hard_negative_mining": QuerySpec(
             _q_hard_negative_mining,
@@ -4529,7 +4165,7 @@ _SQL_FINGERPRINT_OVERLAP_PAIRS = SQL_FP_MINS_BODY + """
 SELECT doc_a, doc_b, n_shared FROM pairs WHERE n_shared >= 50
 """
 
-CATALOG.update(
+_register_pack(
     {
         "fingerprint_overlap_pairs": QuerySpec(
             _q_fingerprint_overlap_pairs,
@@ -4539,15 +4175,6 @@ CATALOG.update(
         ),
     }
 )
-
-
-# --------------------------------------------------------------------------
-# Corpus datasheet (plans/datasheet.py)
-# --------------------------------------------------------------------------
-
-from .datasheet import SPECS as _DATASHEET_SPECS  # noqa: E402
-
-CATALOG.update(_DATASHEET_SPECS)
 
 
 # --------------------------------------------------------------------------
@@ -4599,7 +4226,7 @@ SELECT true_lang, pred_lang, n,
 FROM cells
 """
 
-CATALOG.update(
+_register_pack(
     {
         "language_confusion": QuerySpec(
             _q_language_confusion,
@@ -4612,567 +4239,18 @@ CATALOG.update(
 
 
 # --------------------------------------------------------------------------
-# Exact-oracle ML twins (Lloyd step, exact AUC, fixed-quantizer IVF;
-# plans/ml_exact.py)
+# Pack modules: every module of this package that defines SPECS
 # --------------------------------------------------------------------------
 
-from .ml_exact import SPECS as _ML_EXACT_SPECS  # noqa: E402
-
-CATALOG.update(_ML_EXACT_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Round-4 breadth pack (full-outer, ACF, exact count-min sketch;
-# plans/round4_ops.py)
-# --------------------------------------------------------------------------
-
-def _register_pack(specs) -> None:
-    """Merge a pack into CATALOG, refusing silent overwrites — a pack
-    entry colliding with an existing query name is a bug (it would
-    shadow an already-verified entry), not an update."""
-    dup = sorted(set(specs) & set(CATALOG))
-    if dup:
-        raise ValueError(f"catalog pack collides with existing entries: {dup}")
-    CATALOG.update(specs)
-
-
-from .round4_ops import SPECS as _ROUND4_OPS_SPECS  # noqa: E402
-
-_register_pack(_ROUND4_OPS_SPECS)
-
-
-# --------------------------------------------------------------------------
-# Round-5 pack (composed dedup canary, deterministic stratified sample,
-# sketch error-bound audits, Python UDTF; plans/round5_ops.py)
-# --------------------------------------------------------------------------
-
-from .round5_ops import SPECS as _ROUND5_OPS_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_OPS_SPECS)
-
-from .round5_ext import SPECS as _ROUND5_EXT_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_EXT_SPECS)
-
-from .round5_more import SPECS as _ROUND5_MORE_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_MORE_SPECS)
-
-from .round5_pq import SPECS as _ROUND5_PQ_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_PQ_SPECS)
-
-from .round5_gov import SPECS as _ROUND5_GOV_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_GOV_SPECS)
-
-from .round5_train import SPECS as _ROUND5_TRAIN_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_TRAIN_SPECS)
-
-from .round5_cdc import SPECS as _ROUND5_CDC_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_CDC_SPECS)
-
-from .round5_ml3 import SPECS as _ROUND5_ML3_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_ML3_SPECS)
-
-from .round5_layout import SPECS as _ROUND5_LAYOUT_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_LAYOUT_SPECS)
-
-from .round5_ts3 import SPECS as _ROUND5_TS3_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_TS3_SPECS)
-
-from .round5_feat import SPECS as _ROUND5_FEAT_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_FEAT_SPECS)
-
-from .round5_stats2 import SPECS as _ROUND5_STATS2_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_STATS2_SPECS)
-
-from .round5_contain import SPECS as _ROUND5_CONTAIN_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_CONTAIN_SPECS)
-
-from .round5_ivm import SPECS as _ROUND5_IVM_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_IVM_SPECS)
-
-from .round5_sketch2 import SPECS as _ROUND5_SKETCH2_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_SKETCH2_SPECS)
-
-from .round5_text3 import SPECS as _ROUND5_TEXT3_SPECS  # noqa: E402
-
-_register_pack(_ROUND5_TEXT3_SPECS)
-
-from .round6_suffix import SPECS as _ROUND6_SUFFIX_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_SUFFIX_SPECS)
-
-from .round6_planner import SPECS as _ROUND6_PLANNER_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_PLANNER_SPECS)
-
-from .round6_ops import SPECS as _ROUND6_OPS_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_OPS_SPECS)
-
-from .round6_ml import SPECS as _ROUND6_ML_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_ML_SPECS)
-
-from .round6_more import SPECS as _ROUND6_MORE_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_MORE_SPECS)
-
-from .round6_ir import SPECS as _ROUND6_IR_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_IR_SPECS)
-
-from .round6_eval import SPECS as _ROUND6_EVAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_EVAL_SPECS)
-
-from .round6_graph2 import SPECS as _ROUND6_GRAPH2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_GRAPH2_SPECS)
-
-from .round6_stats3 import SPECS as _ROUND6_STATS3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_STATS3_SPECS)
-
-from .round6_scale2 import SPECS as _ROUND6_SCALE2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_SCALE2_SPECS)
-
-from .round6_analytics import SPECS as _ROUND6_ANALYTICS_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_ANALYTICS_SPECS)
-
-from .round6_curation2 import SPECS as _ROUND6_CURATION2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_CURATION2_SPECS)
-
-from .round6_bi import SPECS as _ROUND6_BI_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_BI_SPECS)
-
-from .round6_quant import SPECS as _ROUND6_QUANT_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_QUANT_SPECS)
-
-from .round6_causal import SPECS as _ROUND6_CAUSAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_CAUSAL_SPECS)
-
-from .round6_stats4 import SPECS as _ROUND6_STATS4_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_STATS4_SPECS)
-
-from .round6_quality2 import SPECS as _ROUND6_QUALITY2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_QUALITY2_SPECS)
-
-from .round6_embed3 import SPECS as _ROUND6_EMBED3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_EMBED3_SPECS)
-
-from .round6_ts4 import SPECS as _ROUND6_TS4_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_TS4_SPECS)
-
-from .round6_media2 import SPECS as _ROUND6_MEDIA2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_MEDIA2_SPECS)
-
-from .round6_ir3 import SPECS as _ROUND6_IR3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_IR3_SPECS)
-
-from .round6_graph3 import SPECS as _ROUND6_GRAPH3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_GRAPH3_SPECS)
-
-from .round6_scale3 import SPECS as _ROUND6_SCALE3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_SCALE3_SPECS)
-
-from .round6_text4 import SPECS as _ROUND6_TEXT4_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_TEXT4_SPECS)
-
-from .round6_audit3 import SPECS as _ROUND6_AUDIT3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_AUDIT3_SPECS)
-
-from .round6_recsys import SPECS as _ROUND6_RECSYS_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_RECSYS_SPECS)
-
-from .round6_olap2 import SPECS as _ROUND6_OLAP2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_OLAP2_SPECS)
-
-from .round6_bi2 import SPECS as _ROUND6_BI2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_BI2_SPECS)
-
-from .round6_stats5 import SPECS as _ROUND6_STATS5_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_STATS5_SPECS)
-
-from .round6_spark4 import SPECS as _ROUND6_SPARK4_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_SPARK4_SPECS)
-
-from .round6_e2e2 import SPECS as _ROUND6_E2E2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_E2E2_SPECS)
-
-from .round6_pct import SPECS as _ROUND6_PCT_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_PCT_SPECS)
-
-from .round6_ts5 import SPECS as _ROUND6_TS5_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_TS5_SPECS)
-
-from .round6_eval2 import SPECS as _ROUND6_EVAL2_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_EVAL2_SPECS)
-
-from .round6_dq3 import SPECS as _ROUND6_DQ3_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_DQ3_SPECS)
-
-from .round6_final import SPECS as _ROUND6_FINAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND6_FINAL_SPECS)
-
-from .round7_stats import SPECS as _ROUND7_STATS_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_STATS_SPECS)
-
-from .round7_text import SPECS as _ROUND7_TEXT_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_TEXT_SPECS)
-
-from .round7_ts import SPECS as _ROUND7_TS_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_TS_SPECS)
-
-from .round7_ops import SPECS as _ROUND7_OPS_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_OPS_SPECS)
-
-from .round7_e2e import SPECS as _ROUND7_E2E_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_E2E_SPECS)
-
-from .round7_quality import SPECS as _ROUND7_QUALITY_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_QUALITY_SPECS)
-
-from .round7_bpe import SPECS as _ROUND7_BPE_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_BPE_SPECS)
-
-from .round7_eval import SPECS as _ROUND7_EVAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_EVAL_SPECS)
-
-from .round7_layout import SPECS as _ROUND7_LAYOUT_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_LAYOUT_SPECS)
-
-from .round7_econ import SPECS as _ROUND7_ECON_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_ECON_SPECS)
-
-from .round7_sre import SPECS as _ROUND7_SRE_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_SRE_SPECS)
-
-from .round7_ur import SPECS as _ROUND7_UR_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_UR_SPECS)
-
-from .round7_granger import SPECS as _ROUND7_GRANGER_SPECS  # noqa: E402
-
-_register_pack(_ROUND7_GRANGER_SPECS)
-
-from .round8_ts import SPECS as _ROUND8_TS_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_TS_SPECS)
-
-from .round8_graph import SPECS as _ROUND8_GRAPH_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_GRAPH_SPECS)
-
-from .round8_bi import SPECS as _ROUND8_BI_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_BI_SPECS)
-
-from .round8_ml import SPECS as _ROUND8_ML_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_ML_SPECS)
-
-from .round8_text import SPECS as _ROUND8_TEXT_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_TEXT_SPECS)
-
-from .round8_dq import SPECS as _ROUND8_DQ_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_DQ_SPECS)
-
-from .round8_spc import SPECS as _ROUND8_SPC_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_SPC_SPECS)
-
-from .round8_embed import SPECS as _ROUND8_EMBED_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_EMBED_SPECS)
-
-from .round8_olap import SPECS as _ROUND8_OLAP_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_OLAP_SPECS)
-
-from .round8_more import SPECS as _ROUND8_MORE_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_MORE_SPECS)
-
-from .round8_infer import SPECS as _ROUND8_INFER_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_INFER_SPECS)
-
-from .round8_surface import SPECS as _ROUND8_SURFACE_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_SURFACE_SPECS)
-
-from .round8_seq import SPECS as _ROUND8_SEQ_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_SEQ_SPECS)
-
-from .round8_skipgram import SPECS as _ROUND8_SKIPGRAM_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_SKIPGRAM_SPECS)
-
-from .round8_ireval import SPECS as _ROUND8_IREVAL_SPECS  # noqa: E402
-
-_register_pack(_ROUND8_IREVAL_SPECS)
-
-from .round9_graph import SPECS as _ROUND9_GRAPH_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_GRAPH_SPECS)
-
-from .round9_iter import SPECS as _ROUND9_ITER_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_ITER_SPECS)
-
-from .round9_dist import SPECS as _ROUND9_DIST_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_DIST_SPECS)
-
-from .round9_epi import SPECS as _ROUND9_EPI_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_EPI_SPECS)
-
-from .round9_root import SPECS as _ROUND9_ROOT_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_ROOT_SPECS)
-
-from .round9_planner import SPECS as _ROUND9_PLANNER_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_PLANNER_SPECS)
-
-from .round9_seq2 import SPECS as _ROUND9_SEQ2_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_SEQ2_SPECS)
-
-from .round9_ir2 import SPECS as _ROUND9_IR2_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_IR2_SPECS)
-
-from .round9_data import SPECS as _ROUND9_DATA_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_DATA_SPECS)
-
-from .round9_sys import SPECS as _ROUND9_SYS_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_SYS_SPECS)
-
-from .round9_motif import SPECS as _ROUND9_MOTIF_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_MOTIF_SPECS)
-
-from .round9_lm import SPECS as _ROUND9_LM_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_LM_SPECS)
-
-from .round9_hits import SPECS as _ROUND9_HITS_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_HITS_SPECS)
-
-from .round9_causal2 import SPECS as _ROUND9_CAUSAL2_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_CAUSAL2_SPECS)
-
-from .round9_shapley import SPECS as _ROUND9_SHAPLEY_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_SHAPLEY_SPECS)
-
-from .round9_wavelet import SPECS as _ROUND9_WAVELET_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_WAVELET_SPECS)
-
-from .round9_ddsketch import SPECS as _ROUND9_DDSKETCH_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_DDSKETCH_SPECS)
-
-from .round9_absorb import SPECS as _ROUND9_ABSORB_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_ABSORB_SPECS)
-
-from .round9_msf import SPECS as _ROUND9_MSF_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_MSF_SPECS)
-
-from .round9_ransac import SPECS as _ROUND9_RANSAC_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_RANSAC_SPECS)
-
-from .round9_eb import SPECS as _ROUND9_EB_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_EB_SPECS)
-
-from .round9_surv2 import SPECS as _ROUND9_SURV2_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_SURV2_SPECS)
-
-from .round9_regret import SPECS as _ROUND9_REGRET_SPECS  # noqa: E402
-
-_register_pack(_ROUND9_REGRET_SPECS)
-
-from .round10_dag import SPECS as _ROUND10_DAG_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_DAG_SPECS)
-
-from .round10_sched import SPECS as _ROUND10_SCHED_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_SCHED_SPECS)
-
-from .round10_replay import SPECS as _ROUND10_REPLAY_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_REPLAY_SPECS)
-
-from .round10_dp import SPECS as _ROUND10_DP_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_DP_SPECS)
-
-from .round10_hll import SPECS as _ROUND10_HLL_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_HLL_SPECS)
-
-from .round10_geo import SPECS as _ROUND10_GEO_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_GEO_SPECS)
-
-from .round10_online import SPECS as _ROUND10_ONLINE_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_ONLINE_SPECS)
-
-from .round10_sched2 import SPECS as _ROUND10_SCHED2_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_SCHED2_SPECS)
-
-from .round10_cache import SPECS as _ROUND10_CACHE_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_CACHE_SPECS)
-
-from .round10_match import SPECS as _ROUND10_MATCH_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_MATCH_SPECS)
-
-from .round10_agree import SPECS as _ROUND10_AGREE_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_AGREE_SPECS)
-
-from .round10_huffman import SPECS as _ROUND10_HUFFMAN_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_HUFFMAN_SPECS)
-
-from .round10_geo2 import SPECS as _ROUND10_GEO2_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_GEO2_SPECS)
-
-from .round10_majority import SPECS as _ROUND10_MAJORITY_SPECS  # noqa: E402
-
-_register_pack(_ROUND10_MAJORITY_SPECS)
-
-from .round11_align import SPECS as _ROUND11_ALIGN_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_ALIGN_SPECS)
-
-from .round11_trend import SPECS as _ROUND11_TREND_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_TREND_SPECS)
-
-from .round11_lz import SPECS as _ROUND11_LZ_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_LZ_SPECS)
-
-from .round11_knap import SPECS as _ROUND11_KNAP_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_KNAP_SPECS)
-
-from .round11_edit import SPECS as _ROUND11_EDIT_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_EDIT_SPECS)
-
-from .round11_assign import SPECS as _ROUND11_ASSIGN_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_ASSIGN_SPECS)
-
-from .round11_snm import SPECS as _ROUND11_SNM_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_SNM_SPECS)
-
-from .round11_iso import SPECS as _ROUND11_ISO_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_ISO_SPECS)
-
-from .round11_jaro import SPECS as _ROUND11_JARO_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_JARO_SPECS)
-
-from .round11_tau import SPECS as _ROUND11_TAU_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_TAU_SPECS)
-
-from .round11_neyman import SPECS as _ROUND11_NEYMAN_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_NEYMAN_SPECS)
-
-from .round11_bt import SPECS as _ROUND11_BT_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_BT_SPECS)
-
-from .round11_novelty import SPECS as _ROUND11_NOVELTY_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_NOVELTY_SPECS)
-
-from .round11_wis import SPECS as _ROUND11_WIS_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_WIS_SPECS)
-
-from .round11_mod import SPECS as _ROUND11_MOD_SPECS  # noqa: E402
-
-_register_pack(_ROUND11_MOD_SPECS)
+def _register_pack_modules() -> None:
+    """Register each plan module's ``SPECS``, in module-name order;
+    modules without one (this registry, the helpers) add nothing."""
+    for info in pkgutil.iter_modules([os.path.dirname(__file__)]):
+        module = importlib.import_module(f"{__package__}.{info.name}")
+        _register_pack(getattr(module, "SPECS", {}))
+
+
+_register_pack_modules()
 
 
 # --------------------------------------------------------------------------

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import word_ngrams
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: eval-set cut (deterministic stand-in for a benchmark suite)
 _N_EVAL = 5

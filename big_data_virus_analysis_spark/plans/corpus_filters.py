@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from ..operators.caching import tracked_cache
 
 _W = 8  # span width (tokens)

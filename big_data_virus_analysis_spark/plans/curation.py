@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: curation thresholds (fixture-calibrated but ordinary in kind)
 _MIN_CHARS, _MAX_CHARS = 100, 400

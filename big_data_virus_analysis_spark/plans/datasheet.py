@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.text_quality import LANG_STOPWORDS
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _EN_STOPS = LANG_STOPWORDS["en"]
 

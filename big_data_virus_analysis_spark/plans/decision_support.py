@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # Exact-money convention (catalog.py module docstring): per-row product
 # cast to DECIMAL(18,4), exact decimal accumulation, cast DOUBLE, round.

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.text_quality import LANG_STOPWORDS
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _MIN_WORDS, _MAX_WORDS = 50, 100_000
 _MIN_MWL, _MAX_MWL = 3.0, 10.0

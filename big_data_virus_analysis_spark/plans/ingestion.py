@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import word_ngrams
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from ..operators.caching import tracked_cache
 
 _N = 3

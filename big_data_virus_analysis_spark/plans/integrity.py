@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _DAY_US = 86_400_000_000
 _N_BUCKETS = 64

@@ -45,21 +45,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.caching import tracked_cache
 from ..operators.prefix_sum import global_row_number
 from ..operators.text_quality import TOKEN_PATTERN
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
+from .frames import EN_STOPS_SQL, TOKS_SQL
 
 _ALPHA = 0.7  # sampling temperature (tokens^alpha), XLM-R convention
 _SEED = 42
-
-#: whitespace tokens, both engines identically
-_TOKS_SQL = "list_filter(string_split(text, ' '), x -> length(x) > 0)"
-
-#: English stopword list as a SQL IN-list (mirrors operators/text_quality.py)
-from ..operators.text_quality import LANG_STOPWORDS as _LSW
-from ..operators.caching import tracked_cache
-_EN_STOPS_SQL = ", ".join(f"'{w}'" for w in _LSW["en"])
 
 
 def _ws_token_count() -> F.Column:
@@ -103,7 +97,7 @@ def _q_domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SQL_DOMAIN_MIXTURE_WEIGHTS = f"""
 WITH t AS (
   SELECT source, count(*) AS n_docs,
-         CAST(sum(len({_TOKS_SQL})) AS BIGINT) AS n_tokens
+         CAST(sum(len({TOKS_SQL})) AS BIGINT) AS n_tokens
   FROM documents GROUP BY source
 ), z AS (
   SELECT sum(pow(CAST(n_tokens AS DOUBLE), {_ALPHA})) AS z,
@@ -148,7 +142,7 @@ def _q_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFram
 _SQL_TOKENIZER_FERTILITY_BY_LANG = f"""
 WITH t AS (
   SELECT lang, count(*) AS n_docs,
-         CAST(sum(len({_TOKS_SQL})) AS BIGINT) AS n_ws_tokens,
+         CAST(sum(len({TOKS_SQL})) AS BIGINT) AS n_ws_tokens,
          CAST(sum(len(regexp_extract_all(text, '{TOKEN_PATTERN}'))) AS BIGINT)
            AS n_re_tokens,
          CAST(sum(octet_length(encode(text))) AS BIGINT) AS n_bytes
@@ -308,10 +302,10 @@ def _q_curriculum_quality_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_CURRICULUM_QUALITY_ORDER = f"""
 WITH t AS (
-  SELECT doc_id, text, {_TOKS_SQL} AS toks FROM documents
+  SELECT doc_id, text, {TOKS_SQL} AS toks FROM documents
 ), parts AS (
   SELECT doc_id,
-         CAST(len(list_filter(toks, x -> x IN ({_EN_STOPS_SQL}))) AS DOUBLE)
+         CAST(len(list_filter(toks, x -> x IN ({EN_STOPS_SQL}))) AS DOUBLE)
            / CAST(len(toks) AS DOUBLE) AS stop_frac,
          least(1.0, CAST(len(toks) AS DOUBLE) / 100.0) AS len_score,
          CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)

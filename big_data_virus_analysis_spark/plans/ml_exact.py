@@ -43,7 +43,7 @@ from ..ml.metrics import exact_auc_frame
 from ..operators.entropy_score import weighted_average_entropy
 from ..operators.similarity import DIM, _l2sq, _plane_weight, ivf_topk_fixed
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 LLOYD_K = 10
 SWEEP_KS = (5, 10, 15, 20)

@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_similarity
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .retrieval import _QUERY_TERMS, _SQL_BM25_BODY, bm25_scores
 
 _CHUNK = 32

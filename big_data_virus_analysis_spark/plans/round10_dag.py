@@ -63,7 +63,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.graph_edges import dup_graph_edges, dup_graph_edges_ctes
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: relaxation rounds for the dup-derivation DAG (measured depth 3 at
 #: sf0.1; 5 = depth + margin, final round must move nothing to prove

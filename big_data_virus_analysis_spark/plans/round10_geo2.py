@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from .catalog import QuerySpec
+from . import QuerySpec
 from .round10_geo import _monthly_points
 
 

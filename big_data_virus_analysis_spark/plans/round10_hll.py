@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import fan_out, load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: register-index bits (3 hex chars) and register count
 HLL_P = 12

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import fan_out, load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: static fold bound: distinct characters never exceed this (emitted
 #: n_symbols makes the premise auditable; ASCII text ≤ ~100 symbols)

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: the Boyer-Moore fold: acc = [candidate_code, counter]
 _BM_FOLD = """aggregate(

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: side size (5 market segments x 5 regions) and the proposal bound
 N_SIDE = 5

@@ -55,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import QuerySpec
+from . import QuerySpec
 from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 #: machine count for the greedy folds (a fixed cluster shape)

@@ -62,7 +62,8 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.dedup import minhash_band_keys, word_ngrams
 from ..sources.tables import load_table
-from .catalog import QuerySpec, _minhash_sig_ctes
+from . import QuerySpec
+from .frames import minhash_sig_ctes
 
 #: eval corpus = doc_id < N_EVAL (plans/contamination.py convention,
 #: widened so the best-match table has real spread at sf0.01+)
@@ -262,7 +263,7 @@ def _q_eval_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # DuckDB oracle twins — md5 signature family shared with the dedup
-# flagship (catalog._minhash_sig_ctes), split cross-corpus
+# flagship (frames.minhash_sig_ctes), split cross-corpus
 # --------------------------------------------------------------------------
 
 _SQL_GRAM_IDS = """
@@ -290,7 +291,7 @@ def _sql_scored_ctes() -> str:
     jaccard_micro)`` — the relational twin of _scored_candidates."""
     return (
         _SQL_GRAM_IDS
-        + _minhash_sig_ctes(MH_K, MH_K // MH_BANDS)
+        + minhash_sig_ctes(MH_K, MH_K // MH_BANDS)
         + f""", cand AS MATERIALIZED (
   SELECT t.doc_id AS train_doc, e.doc_id AS eval_doc,
          CAST(count(*) AS BIGINT) AS n_shared_bands

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from .catalog import QuerySpec
+from . import QuerySpec
 from .round10_match import _cells
 
 #: subset-DP over segments 1..5 with the 32-entry dp vector carried;

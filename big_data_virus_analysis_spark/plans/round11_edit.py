@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import ngram_jaccard_pairs
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: edit-distance prefix cap — the per-pair DP is ED_MAX_CHARS² steps,
 #: corpus-independent

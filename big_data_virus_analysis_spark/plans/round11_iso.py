@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: cascade bound = calendar month count ceiling (the fixture spans
 #: ~84 months; 128 is safely above any same-schema calendar)

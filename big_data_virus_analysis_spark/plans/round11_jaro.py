@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import ngram_jaccard_pairs
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: prefix cap — bounds the per-pair fold (window probes included)
 JARO_MAX_CHARS = 64

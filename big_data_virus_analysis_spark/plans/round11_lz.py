@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import fan_out, load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: parse-complexity prefix cap — bounds the fold state (dictionary
 #: size and phrase length) so per-row work is corpus-independent

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: sampling budget to allocate
 NEYMAN_BUDGET = 1000

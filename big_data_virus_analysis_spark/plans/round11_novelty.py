@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import word_ngrams
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .round11_align import N_EVAL
 
 #: memorization gram order (verbatim 8-grams, the standard proxy)

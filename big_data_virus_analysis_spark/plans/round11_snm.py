@@ -50,7 +50,7 @@ from ..operators.caching import tracked_cache
 from ..operators.dedup import ngram_jaccard_pairs, word_ngrams
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: sort-key prefix length (lowercased first chars)
 SNM_KEY_CHARS = 24

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from .catalog import QuerySpec
+from . import QuerySpec
 from .round11_edit import _SQL_EDIT_PAIRS, _q_edit_distance_dup_pairs_fast
 
 

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .round10_replay import IVL_SEC_PER_CHAR
 
 #: top-k users emitted

@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
+from .frames import SQL_DEDUP_CLUSTER_ASSIGN, SQL_KNN_VOTES_BODY
 
 # deterministic LCG constants shared in spirit with similarity._plane_weight
 _CMS_D = 4  # hash rows
@@ -924,13 +925,10 @@ def _q_lateral_topk_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_dedup_cluster_size_histogram() -> str:
     # the recursive component-assignment oracle wrapped as a subquery
-    # (imported lazily: catalog defines it before importing this pack)
-    from .catalog import _SQL_DEDUP_CLUSTER_ASSIGN
-
     return f"""
 SELECT size, count(*) AS n_clusters FROM (
   SELECT cluster_id, count(*) AS size FROM (
-{_SQL_DEDUP_CLUSTER_ASSIGN}
+{SQL_DEDUP_CLUSTER_ASSIGN}
   ) GROUP BY cluster_id
 ) GROUP BY size
 """
@@ -1119,8 +1117,6 @@ def _q_label_noise_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_label_noise_candidates() -> str:
-    from .catalog import SQL_KNN_VOTES_BODY
-
     return SQL_KNN_VOTES_BODY + """
 , pred AS (
   SELECT query_id, label AS pred_label, votes

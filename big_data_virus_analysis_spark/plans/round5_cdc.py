@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _CDC_W = 13  # hash window width (bits of the modulus)
 _CDC_MOD = 64  # boundary selectivity: ~1/64 positions → ~64-byte chunks

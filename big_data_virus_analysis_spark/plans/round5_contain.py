@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.dedup import word_ngrams
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _GRAM_SQL = """
 WITH toks AS (

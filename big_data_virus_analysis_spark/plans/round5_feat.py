@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..operators.graph import copurchase_edges
 from ..operators.prefix_sum import global_row_number, ntile_from_rank
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # degree_assortativity

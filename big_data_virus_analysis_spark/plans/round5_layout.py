@@ -47,7 +47,7 @@ from ..functions.vectors import zorder_value
 from ..operators.caching import tracked_cache
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _BITS = 8  # band resolution: 256 bands per dimension
 _N_ZONES = 100

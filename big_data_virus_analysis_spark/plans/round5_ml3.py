@@ -44,7 +44,8 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_prefix_sum
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
+from .frames import SQL_EMBEDDING_COVARIANCE_CELLS
 
 # --------------------------------------------------------------------------
 # nb_gaussian_confusion
@@ -581,12 +582,8 @@ FROM w2 CROSS JOIN n2
 
 
 def _pca_power_sql() -> str:
-    # late import: catalog defines the covariance oracle ABOVE its
-    # pack-registration block, so the constant exists when packs load
-    from .catalog import _SQL_EMBEDDING_COVARIANCE_CELLS
-
     return _SQL_PCA_POWER_ITERATION_EXACT.format(
-        cov=_SQL_EMBEDDING_COVARIANCE_CELLS
+        cov=SQL_EMBEDDING_COVARIANCE_CELLS
     )
 
 

@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
+from .frames import minhash_lsh_sql
 
 # --------------------------------------------------------------------------
 # cross_source_dup_audit
@@ -85,11 +86,9 @@ def _q_cross_source_dup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_cross_source_dup_audit() -> str:
-    from .catalog import _minhash_lsh_sql
-
     return (
         "WITH pairs AS (\n"
-        + _minhash_lsh_sql(_XS_K, _XS_K // _XS_BANDS)
+        + minhash_lsh_sql(_XS_K, _XS_K // _XS_BANDS)
         + """
 ), tagged AS (
   SELECT least(da.source, db.source) AS source_lo,
@@ -165,11 +164,9 @@ def _q_lsh_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_lsh_precision_audit() -> str:
-    from .catalog import _minhash_lsh_sql
-
     return (
         "WITH cands AS (\n"
-        + _minhash_lsh_sql(_XS_K, _XS_K // _XS_BANDS)
+        + minhash_lsh_sql(_XS_K, _XS_K // _XS_BANDS)
         + f"""
 ), vtoks AS (
   SELECT doc_id, string_split(text, ' ') AS tokens FROM documents

@@ -50,7 +50,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
+from .frames import minhash_lsh_sql
 
 # --------------------------------------------------------------------------
 # dedup_pipeline_e2e
@@ -97,13 +98,10 @@ def _q_dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_dedup_pipeline_e2e() -> str:
     # the k=16/4-band pair oracle + the recursive transitive closure,
-    # extended with survivor accounting (lazy import: catalog defines
-    # the shared SQL builders before importing this pack)
-    from .catalog import _minhash_lsh_sql
-
+    # extended with survivor accounting
     return (
         "WITH RECURSIVE pairs AS (\n"
-        + _minhash_lsh_sql(_E2E_K, _E2E_K // _E2E_BANDS)
+        + minhash_lsh_sql(_E2E_K, _E2E_K // _E2E_BANDS)
         + """
 ), e2e_edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM pairs

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # pq_adc_topk_fixed

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_prefix_sum, global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # heaps_law_curve

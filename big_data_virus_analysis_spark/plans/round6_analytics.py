@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_prefix_sum
 from ..operators.similarity import cosine_topk
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # nelson_aalen_hazard

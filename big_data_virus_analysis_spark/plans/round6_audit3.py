@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..ml.metrics import exact_auc_frame
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # fixed_scorer_learning_curve

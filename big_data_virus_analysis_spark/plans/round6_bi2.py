@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 # --------------------------------------------------------------------------

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_prefix_sum
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # als_step_exact

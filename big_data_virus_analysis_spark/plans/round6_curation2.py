@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .retrieval import _QUERY_TERMS, bm25_scores
 from .round6_graph2 import _SQL_SUPPORT_EDGES, _support_edges
 

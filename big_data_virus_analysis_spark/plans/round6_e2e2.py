@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # near_duplicate_orders

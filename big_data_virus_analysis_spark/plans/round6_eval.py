@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number
 from ..operators.similarity import ann_lsh_topk, cosine_topk
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # ann_recall_audit

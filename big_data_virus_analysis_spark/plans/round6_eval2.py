@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_prefix_sum
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # expected_calibration_error

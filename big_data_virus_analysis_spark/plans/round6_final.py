@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # threshold_sweep_metrics

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
-from .catalog import QuerySpec
+from . import QuerySpec
 from ..operators.graph_edges import dup_graph_edges as _dup_edges
 from ..operators.graph_edges import dup_graph_edges_ctes
 

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.graph_edges import dup_graph_edges, dup_graph_edges_ctes
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # phrase_search_positional

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _QL_QUERY = ["join", "vector", "filter"]
 _QL_MU = 100.0

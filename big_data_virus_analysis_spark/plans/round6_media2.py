@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..operators.multimodal import attach_binary_payload
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _CHUNK = 128
 _SEG_RATE = 100  # "samples" (bytes) per second

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .ml_exact import DIM, _plane_weight
 
 # --------------------------------------------------------------------------

@@ -31,7 +31,7 @@ from pyspark.sql import Window
 
 from ..operators.prefix_sum import global_prefix_sum
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # weighted_median_by_brand

@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 from ..operators import graph_edges
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # pagerank_dup_graph_exact

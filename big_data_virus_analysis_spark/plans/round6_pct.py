@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # percentile_cont_vs_disc_audit

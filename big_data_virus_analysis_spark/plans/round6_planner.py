@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _BROADCAST_THRESHOLD = 10 * 1024 * 1024  # Spark's default 10 MB
 _SCALE_X = 1000

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _TWO60_I = 1 << 60
 

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _CF_MIN_CO = 2
 _CF_TOPK = 3

@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import cosine_topk
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # band_join_prices

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from ..operators.prefix_sum import global_row_number, ntile_from_rank
 from ..operators.similarity import DIM, _plane_weight
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _YEAR = 1996
 _EPOCH = f"{_YEAR}-01-01"  # a Monday: datediff % 7 == 0 -> Monday

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _SPAN_L = 8  # minimum duplicated span length, in tokens
 _SUFFIX_K = 32  # suffix truncation: reported lcp = min(true_lcp, K)

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:

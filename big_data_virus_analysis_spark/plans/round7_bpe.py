@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from ..operators.bpe import _merge_expr, _word_symbols
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _N_STEPS = 2
 

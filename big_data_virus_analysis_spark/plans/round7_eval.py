@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import dedup_clusters, minhash_lsh_pairs, simhash_pairs
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 
 def _q_adjusted_rand_clusterings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,8 +119,8 @@ def _q_adjusted_rand_clusterings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The twin replays both clusterings relationally.  The shared shingle-id
 # prefix, the k=32/8-band signature chain, and the SimHash chain below
-# are literally the catalog's canonical fragments (catalog.py:
-# _SQL_SHINGLE_IDS / _minhash_band_sql / _SQL_SIMHASH_BASE), inlined
+# are literally the catalog's canonical fragments (frames.py:
+# SQL_SHINGLE_IDS / minhash_band_sql; catalog.py: _SQL_SIMHASH_BASE), inlined
 # because the two pipelines must share one WITH clause here.
 _SQL_ADJUSTED_RAND_CLUSTERINGS = """
 WITH RECURSIVE toks AS (

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 
 def _granger_moment_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

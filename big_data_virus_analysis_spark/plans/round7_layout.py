@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import zorder_value
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _BITS = 8
 _N = 1 << _BITS  # 256-band grid per dimension

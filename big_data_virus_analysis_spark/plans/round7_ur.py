@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_row_number
-from .catalog import QuerySpec
+from . import QuerySpec
 from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 

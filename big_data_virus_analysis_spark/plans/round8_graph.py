@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..operators import graph_edges
 from ..operators.caching import tracked_cache
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _RICH_KS = (8, 16)
 _JACC_TOPK = 15

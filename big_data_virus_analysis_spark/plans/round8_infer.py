@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 from .round7_granger import _SQL_GRANGER_MOMENTS, _granger_fit, _granger_moment_frame
 from .round7_stats import _residual_day_frame, _SQL_RESIDUAL_DAY_FRAME

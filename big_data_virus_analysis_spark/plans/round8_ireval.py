@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _NDCG_K = 10
 #: integer discount constants: q_i = floor(1e8 / log2(i+1) + 0.5)

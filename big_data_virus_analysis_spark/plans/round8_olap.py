@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 # --------------------------------------------------------------------------
 # rolling_correlation_30d

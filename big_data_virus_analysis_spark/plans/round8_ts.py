@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_row_number
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 # --------------------------------------------------------------------------

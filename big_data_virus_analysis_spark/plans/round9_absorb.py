@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: Neumann sweeps — residual (unabsorbed mass) is EMITTED, not assumed
 ABSORB_SWEEPS = 32

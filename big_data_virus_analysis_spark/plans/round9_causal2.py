@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: matching caliper in cents ($100) — also the bucket width, which is
 #: what makes the 3-bucket probe complete

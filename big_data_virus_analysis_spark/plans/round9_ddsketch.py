@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: DDSketch relative-accuracy parameter
 DD_GAMMA = 1.02

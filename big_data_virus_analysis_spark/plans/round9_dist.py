@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from ..operators.caching import tracked_cache
 from ..operators.prefix_sum import global_prefix_sum
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 _W1_YEARS = (1995, 1996)

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: frequency-of-frequency table depth (the 10 rarest observed classes)
 GT_TOPK = 10

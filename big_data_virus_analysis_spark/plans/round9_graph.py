@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 
 from ..operators import graph_edges
 from ..operators.caching import tracked_cache
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: unrolled peel rounds per k — measured fixpoint depth is 1 effective
 #: round on the capped graph at every SF; 3 rounds leaves the final

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: full (authority + hub) sweeps — the audit shows the micro-unit
 #: trajectory inside its truncation floor by sweep 3; 4 proves it

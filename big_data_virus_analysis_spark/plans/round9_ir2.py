@@ -33,7 +33,7 @@ from ..operators.caching import tracked_cache
 from ..operators.prefix_sum import global_prefix_sum
 from ..operators.sessions import sessionize
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _PROX = ("data", "fast")
 _SLOP = 3

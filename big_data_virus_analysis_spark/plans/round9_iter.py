@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: full row+column sweeps — measured plateau (truncation floor ≤ 5
 #: micro) is reached by sweep 3 at every SF; 4 proves it

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import fan_out, load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: absolute discount D = KN_D_NUM / KN_D_DEN (Chen & Goodman's fixed
 #: discount; 3/4 keeps the probability an exact integer rational)

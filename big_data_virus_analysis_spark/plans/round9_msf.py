@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..operators.graph_edges import dup_graph_edges, dup_graph_edges_ctes
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: Borůvka rounds (components at least halve per converged round)
 MSF_ROUNDS = 3

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: bisection rounds (bracket 10000 bp → < 1 bp) and Newton rounds
 IRR_ROUNDS = 14

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_prefix_sum
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: alarm threshold in micro-cents of cumulated deviation ($2M)
 PH_LAMBDA_MICRO = 200_000_000 * 1_000_000

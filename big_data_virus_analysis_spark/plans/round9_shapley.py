@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators.caching import tracked_cache
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: channels in bit order (alphabetical; purchase is the conversion)
 SHAPLEY_CHANNELS = ("click", "error", "signup", "view")

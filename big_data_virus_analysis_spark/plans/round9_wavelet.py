@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .catalog import QuerySpec
+from . import QuerySpec
 from .frames import SQL_DAILY_ORDER_CENTS, daily_order_cents
 
 #: dyadic window: 2**HAAR_LEVELS leading observed days

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import cosine_similarity
 from ..operators.similarity import lsh_bucket
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 from .rag import SQL_CENTROID_ASSIGN_BODY, assign_nearest_centroid
 from ..operators.caching import tracked_cache
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 #: epoch-day anchor inside the events fixture's span (2024-01) so the
 #: regression's x values are O(10) instead of O(20 000) — keeps the

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..operators.prefix_sum import global_prefix_sum
 from ..sources.tables import load_table
-from .catalog import QuerySpec
+from . import QuerySpec
 
 _DAY_US = 86_400_000_000
 

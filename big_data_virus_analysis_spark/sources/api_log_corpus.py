@@ -34,6 +34,8 @@ CORPUS_VERSION = 1
 SEED = 7
 N_CLEAN, N_VIRUS = 720, 884
 CLASS_DIRS = {"clean": "clean_LOGS_CONVERTED", "virus": "virus_LOGS_CONVERTED"}
+#: the reference checkout's own corpus
+REFERENCE_ROOT = "/root/reference/api_logs"
 _MARKS = {"clean": "-", "virus": "+"}
 
 _SHARED_APIS = """
@@ -123,3 +125,12 @@ def generated_corpus_root(base_dir: str | None = None) -> str:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return root
+
+
+def api_log_root() -> str:
+    """The corpus root every api-log reader uses: the reference's own
+    corpus where both ``*_LOGS_CONVERTED`` directories exist, else the
+    generated one (:func:`generated_corpus_root`)."""
+    if all(os.path.isdir(os.path.join(REFERENCE_ROOT, d)) for d in CLASS_DIRS.values()):
+        return REFERENCE_ROOT
+    return generated_corpus_root()

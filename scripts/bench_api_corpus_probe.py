@@ -1,8 +1,9 @@
 """Measured scaling for the flagship reference workload (r8 VERDICT
 directive #4): ``api_log_feature_job_e2e`` is corpus-fixed (it reads
-the reference's own 1,604-file api_logs corpus, so bench.py's per-SF
-legs would measure identical work thrice and correctly skip it).  This
-probe builds REPLICATED corpora — every file copied K× under a
+the 1,604-file api_logs corpus — the reference's own where present,
+else the generated one, sources/api_log_corpus.py::api_log_root — so
+bench.py's per-SF legs would measure identical work thrice and
+correctly skip it).  This probe builds REPLICATED corpora — every file copied K× under a
 distinct name (`` rN)converted.txt`` suffix), so doc count, per-class
 document frequencies, and LIBSVM output all scale by K while the token
 vocabulary stays the reference's own — and measures the identical
@@ -32,7 +33,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-REF = "/root/reference/api_logs"
+from big_data_virus_analysis_spark.sources.api_log_corpus import api_log_root  # noqa: E402
+
+REF = api_log_root()
 SCALES = (1, 4, 16)
 BASE_TMP = "/tmp/bdva_api_scaled"
 

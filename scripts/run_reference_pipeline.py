@@ -10,7 +10,9 @@ This script produces all four artifacts from the engine's operators:
 
   python scripts/run_reference_pipeline.py [OUT_DIR] [CLEAN_DIR VIRUS_DIR]
 
-Defaults: OUT_DIR=/tmp/bdva_out, corpus=/root/reference/api_logs.
+Defaults: OUT_DIR=/tmp/bdva_out; the corpus is the reference's own
+api_logs where present, else the generated corpus of the same shape
+(sources/api_log_corpus.py::api_log_root).
 Artifacts land as topFeatures.txt, LIBSVMOutput.txt, output.txt,
 data.json, model_auc.txt — same grammar as the committed goldens
 (structural parity pinned in tests/test_reference_parity.py).
@@ -45,10 +47,12 @@ from big_data_virus_analysis_spark.operators.vectorize import (  # noqa: E402
     libsvm_text,
 )
 from big_data_virus_analysis_spark.session import get_spark  # noqa: E402
+from big_data_virus_analysis_spark.sources.api_log_corpus import (  # noqa: E402
+    CLASS_DIRS,
+    api_log_root,
+)
 from big_data_virus_analysis_spark.sources.api_logs import api_log_feature_chain  # noqa: E402
 from big_data_virus_analysis_spark.sources.sinks import write_report_text  # noqa: E402
-
-REF = "/root/reference/api_logs"
 
 
 def _flatten(path: str) -> None:
@@ -68,8 +72,12 @@ def _flatten(path: str) -> None:
 
 def main() -> None:
     out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/bdva_out"
-    clean_dir = sys.argv[2] if len(sys.argv) > 3 else f"{REF}/clean_LOGS_CONVERTED"
-    virus_dir = sys.argv[3] if len(sys.argv) > 3 else f"{REF}/virus_LOGS_CONVERTED"
+    if len(sys.argv) > 3:
+        clean_dir, virus_dir = sys.argv[2], sys.argv[3]
+    else:
+        root = api_log_root()
+        clean_dir = os.path.join(root, CLASS_DIRS["clean"])
+        virus_dir = os.path.join(root, CLASS_DIRS["virus"])
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("bdva-reference-pipeline")

@@ -12,10 +12,12 @@ Usage: python scripts/scan_global_windows.py [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
+sys.path.insert(0, os.path.join(_REPO, "tests"))
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 

@@ -17,10 +17,16 @@ stricter driver-parity type check on top.
 
 from __future__ import annotations
 
+import importlib
 import os
+import pkgutil
+import subprocess
+import sys
 
 import pytest
 
+from big_data_virus_analysis_spark import plans
+from big_data_virus_analysis_spark.plans import catalog
 from big_data_virus_analysis_spark.plans.catalog import CATALOG
 
 from conftest import SF_DIR, assert_frames_match
@@ -67,3 +73,51 @@ def test_catalog_md_is_current():
         content = f.read()
     missing = [n for n in CATALOG if f"`{n}`" not in content]
     assert not missing, f"regenerate CATALOG.md; missing {missing}"
+
+
+def test_every_pack_entry_is_registered():
+    """The registry discovers its packs: every entry of every plan
+    module's ``SPECS`` is in CATALOG as the very same QuerySpec."""
+    modules = [
+        importlib.import_module(f"{plans.__name__}.{info.name}")
+        for info in pkgutil.iter_modules(plans.__path__)
+    ]
+    packs = [m for m in modules if hasattr(m, "SPECS")]
+    assert packs
+    for module in packs:
+        for name, spec in module.SPECS.items():
+            assert CATALOG.get(name) is spec, f"{module.__name__}: {name}"
+
+
+def test_register_pack_refuses_a_taken_name():
+    """A pack that reuses a registered name raises and registers none of
+    its entries, so it cannot shadow a verified query."""
+    before = list(CATALOG.items())
+    taken = before[0][0]
+    spec = CATALOG[taken]
+    with pytest.raises(ValueError, match=taken):
+        catalog._register_pack({"register_pack_probe": spec, taken: spec})
+    assert list(CATALOG.items()) == before
+
+
+def test_plan_modules_do_not_load_the_registry():
+    """A plan module defines its SPECS without the registry: in a fresh
+    interpreter, importing frames and round7_granger, then every other
+    module of plans/ but catalog.py, leaves plans.catalog unloaded."""
+    code = """
+import importlib, pkgutil, sys
+import big_data_virus_analysis_spark.plans as plans
+import big_data_virus_analysis_spark.plans.frames
+import big_data_virus_analysis_spark.plans.round7_granger
+registry = plans.__name__ + ".catalog"
+assert registry not in sys.modules, "frames / round7_granger"
+for info in pkgutil.iter_modules(plans.__path__):
+    if info.name != "catalog":
+        importlib.import_module(plans.__name__ + "." + info.name)
+        assert registry not in sys.modules, info.name
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]

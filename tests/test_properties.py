@@ -4131,7 +4131,7 @@ def test_boyer_moore_planted_and_adversarial():
 
 def _mh_band_keys(grams, k=32, bands=8):
     """Pure-Python replication of the engines' shared md5 MinHash
-    family (operators/dedup.py::_family / catalog._minhash_sig_ctes):
+    family (operators/dedup.py::_family / frames.minhash_sig_ctes):
     md5-prefix token id -> mod-2^31 scramble -> odd-multiplier linear
     permutations -> banded keys."""
     import hashlib

@@ -476,3 +476,17 @@ def test_generated_corpus_is_fixed_and_reference_shaped(tmp_path):
             # one CR per line, and only as the line's last character
             assert all(call.fullmatch(ln) for ln in calls), name
     assert digest.hexdigest() == GENERATED_CORPUS_SHA256
+
+
+def test_api_log_root_needs_both_reference_class_dirs(tmp_path, monkeypatch):
+    """Every api-log reader resolves its corpus through api_log_root():
+    the reference's own corpus only where both class directories exist,
+    else the generated one."""
+    from big_data_virus_analysis_spark.sources import api_log_corpus as corpus
+
+    ref = tmp_path / "api_logs"
+    monkeypatch.setattr(corpus, "REFERENCE_ROOT", str(ref))
+    (ref / corpus.CLASS_DIRS["clean"]).mkdir(parents=True)
+    assert corpus.api_log_root() == corpus.generated_corpus_root()
+    (ref / corpus.CLASS_DIRS["virus"]).mkdir()
+    assert corpus.api_log_root() == str(ref)
